@@ -4007,10 +4007,11 @@ def sim_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ANN served from the PERSISTED index
     (``similarity.write_pq_index`` / ``pq_topk_rerank_indexed``): the
     deterministic kmeans codebooks and the corpus's 8-byte codes live
-    as parquet artifacts (params in an fsio sidecar); a query builds
-    its broadcast ADC distance table from the stored books, scans only
-    the code rows for the shortlist, and reranks the bounded shortlist
-    against full vectors from the source table — the fifth durable
+    as parquet artifacts (params in an fsio sidecar); the driver folds
+    each query's ADC distance table from the stored books into one
+    broadcast frame, the code rows are the only corpus-sized scan for
+    the shortlist, and the bounded shortlist is reranked against full
+    vectors from the source table — the fifth durable
     index family (Z-order, IVF, dedup, BM25, PQ)."""
     import os
     import tempfile
@@ -4850,8 +4851,8 @@ def _pq_exact_oracle(k: int = 10, shortlist: int = 200, m: int = 8,
     codebooks (pq_codebooks_exact's math), L2 encode with the same
     multiply-not-pow squares and (d2 ASC, code ASC) tie rule,
     fixed-order ADC folds (per-subspace partial in component order,
-    then across subspaces in subspace order — matching the Spark
-    side's fixed_order=True in-row fold, never a hash-agg float sum),
+    then across subspaces in subspace order — the Spark side's ADC
+    fold, never a hash-agg float sum),
     and the exact-cosine rerank. Every float comes from the identical
     fold, so the approximate search hash-matches bit-for-bit."""
     sub = dim // m
@@ -4939,7 +4940,7 @@ def sim_pq_indexed_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.write_pq_index(emb, books, base)
     queries = emb.where(F.col("vec_id") < 5)
     out = S.pq_topk_rerank_indexed(spark, base, emb, queries, k=10,
-                                   shortlist=200, fixed_order=True)
+                                   shortlist=200)
     return (out.select("query_id", "neighbor_id", "cosine_sim",
                        F.col("rank").cast("long").alias("rank"))
             .orderBy("query_id", "rank"))

@@ -858,8 +858,8 @@ def pq_encode(corpus: DataFrame, codebooks: DataFrame,
     :func:`ivf_assign` calls unioned — scanned the corpus 8× and
     paid the interpreted higher-order-function argmin (~300µs/row);
     this is the sanctioned Arrow extension path (SURVEY §2.8). Long
-    form (one row per (id, subspace)) keeps downstream ADC a plain
-    equi-join.
+    form (one row per (id, subspace)); :func:`codes_to_wide` pivots it
+    to the one-row-per-vector shape ADC scans and the index stores.
 
     Contract: ``vec_col`` must be NON-NULL and exactly ``dim``
     elements on every row — null/ragged vectors raise the clean
@@ -907,12 +907,12 @@ def pq_encode(corpus: DataFrame, codebooks: DataFrame,
 
 
 def _codes_are_long(codes: DataFrame) -> bool:
-    """True for the long (id, subspace, code) shape; False for the
-    wide (id, c0..c{m-1}) shape the persisted index stores (round 16:
-    one row and num_subspaces small ints per vector — ~8× fewer
-    stored rows, and the fixed-order serving path needs no pivot
-    exchange). Both shapes carry the same code values bit-for-bit
-    (the wide form IS the long form's pivot)."""
+    """True for the long (id, subspace, code) shape :func:`pq_encode`
+    emits; False for the wide (id, c0..c{m-1}) shape the persisted
+    index stores — one row of num_subspaces small ints per vector,
+    which ADC scans without a pivot exchange. Both shapes carry the
+    same code values bit-for-bit (the wide form IS the long form's
+    pivot)."""
     return "subspace" in codes.columns and "code" in codes.columns
 
 
@@ -934,129 +934,97 @@ def codes_to_wide(codes: DataFrame, id_col: str = "vec_id",
     return codes
 
 
-def _codes_long(codes: DataFrame, id_col: str,
-                num_subspaces: int) -> DataFrame:
-    """The long (id, subspace, code) view of a codes frame: wide rows
-    unpivot IN-ROW (an explode over a literal array — no shuffle),
-    yielding exactly the rows the long form stores, in subspace
-    order."""
-    if _codes_are_long(codes):
-        return codes
-    missing = [f"c{j}" for j in range(num_subspaces)
-               if f"c{j}" not in codes.columns]
-    if missing:
-        raise ValueError(
-            f"pq codes frame is neither long (subspace, code) nor "
-            f"wide — missing columns {missing}")
-    return codes.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.struct(F.lit(j).cast("long").alias("subspace"),
-                     F.col(f"c{j}").cast("long").alias("code"))
-            for j in range(num_subspaces)])).alias("__e")) \
-        .select(id_col, F.col("__e.subspace").alias("subspace"),
-                F.col("__e.code").alias("code"))
+def _adc_topk(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
+              k: int, num_subspaces: int, vec_col: str, id_col: str,
+              dim: int, op: str) -> tuple[DataFrame, DataFrame]:
+    """The one ADC core behind every PQ search: returns the per-query
+    top-k frame (query_id, neighbor_id, approx_dot, rank) and the
+    (query_id, __qv) frame it was scored from.
+
+    The query vectors — the bounded set every ADC plan broadcasts,
+    held to the fixed-dim non-null contract first — and the
+    model-sized codebooks are collected once. Each query's
+    num_subspaces × n_codes partial-dot table is folded on the driver
+    by :func:`_fold_dots`, the JVM ``dot`` twin, so every partial is
+    bit-identical to the in-plan fold. The tables ship as ONE Arrow
+    frame, which plans as a LocalTableScan: executing the search
+    re-scans no query source and wakes no Python worker, and
+    non-finite partials survive as values (an SQL literal cannot
+    spell them). That frame broadcasts against the wide code scan,
+    and approx_dot sums the looked-up partials left to right in
+    subspace order. A fixed fold, unlike a hash-aggregate float SUM
+    whose addition order depends on partitioning, so the shortlist
+    cut (decided by a sum of num_subspaces doubles) reproduces
+    bit-for-bit against an oracle engine."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    sub = dim // num_subspaces
+    qrows = queries.select(
+        F.col(id_col), _checked_vec(vec_col, dim, op).alias(vec_col)).collect()
+    if any(x is None for r in qrows for x in r[vec_col]):
+        # NumPy would read a null element as NaN, which ranks first
+        raise ValueError(f"{op}: {vec_col} has a null element "
+                         f"(fixed-dim non-null contract)")
+    books = codebooks.select("subspace", "centroid_id", "centroid").collect()
+    # codes index the table by centroid id directly (ids may be sparse);
+    # slots no centroid fills are never looked up
+    n_codes = 1 + max(int(r["centroid_id"]) for r in books)
+    cb = np.zeros((num_subspaces, n_codes, sub))
+    for r in books:
+        cb[int(r["subspace"]), int(r["centroid_id"])] = r["centroid"]
+    qv = np.array([r[vec_col] for r in qrows],
+                  dtype=np.float64).reshape(len(qrows), dim)
+    tables = np.stack([_fold_dots(qv[:, j * sub:(j + 1) * sub], cb[j])
+                       for j in range(num_subspaces)], axis=1)
+    qt = queries.sparkSession.createDataFrame(pa.table({
+        "query_id": pa.array([r[id_col] for r in qrows],
+                             to_arrow_type(queries.schema[id_col].dataType)),
+        "__qv": pa.array(list(qv), pa.list_(pa.float64())),
+        "__adc": pa.array(list(tables.reshape(len(qrows),
+                                              num_subspaces * n_codes)),
+                          pa.list_(pa.float64()))}))
+    approx = F.lit(0.0)
+    for j in range(num_subspaces):
+        approx = approx + F.element_at(
+            "__adc", (F.col(f"c{j}") + (j * n_codes + 1)).cast("int"))
+    scored = (codes_to_wide(codes, id_col, num_subspaces)
+              .crossJoin(F.broadcast(qt.select("query_id", "__adc")))
+              .where(F.col("query_id") != F.col(id_col))
+              .select("query_id", F.col(id_col).alias("neighbor_id"),
+                      approx.alias("approx_dot")))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("approx_dot"), F.asc("neighbor_id"))
+    top = (scored.withColumn("rank", F.row_number().over(w).cast("long"))
+           .where(F.col("rank") <= k))
+    return top, qt.select("query_id", "__qv")
 
 
 def pq_topk(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
             k: int = 10, num_subspaces: int = 8,
             vec_col: str = "embedding", id_col: str = "vec_id",
-            dim: int = 64, fixed_order: bool = False) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: each query
-    precomputes its num_subspaces·K partial dot products against the
-    codebook (a model-sized table that BROADCASTS), then the corpus is
-    scanned only through its code columns — approx_dot(q, x) =
-    Σ_j <q_j, centroid[j][code_j(x)]>. The full vectors never move;
-    the only corpus-sized shuffle is the (query, id) partial-sum
-    aggregate.
+            dim: int = 64) -> DataFrame:
+    """Asymmetric-distance (ADC) top-k over PQ codes: each query's
+    num_subspaces·K partial dot products against the codebook form a
+    model-sized table that BROADCASTS, and the corpus is scanned only
+    through its code columns — approx_dot(q, x) =
+    Σ_j <q_j, centroid[j][code_j(x)]>, summed left to right in
+    subspace order (see :func:`_adc_topk`). The full vectors never
+    move; the only shuffle is the per-query top-k window, which Spark
+    pre-limits per partition.
 
     Returns (query_id, neighbor_id, approx_dot, rank ≤ k); ranking
     quality is bounded by quantization error — see the recall pytest
-    against :func:`brute_force_topk`.
-
-    ``fixed_order=True`` computes each approx_dot as a FIXED-ORDER
-    fold — per-subspace partials from the broadcast literal codebook,
-    summed left-to-right in subspace order in-row — instead of the
-    hash-agg ``SUM(partial)``, whose float addition order is
-    partitioning-dependent. Same value up to ulps; choose it when the
-    shortlist must reproduce bit-for-bit against an oracle engine
-    (the sum of 8 doubles decides the shortlist cut)."""
-    sub = dim // num_subspaces
-    if fixed_order:
-        rows = codebooks.collect()   # model-sized, like ivf_assign
-        bk = {(int(r["subspace"]), int(r["centroid_id"])):
-              [float(x) for x in r["centroid"]] for r in rows}
-        n_codes = 1 + max(c for _, c in bk)
-        # the flat distance table is num_subspaces·n_codes·sub double
-        # LITERALS (~1k at the defaults). Building it as nested
-        # F.array(F.lit(...)) cost one py4j round-trip per element —
-        # measured 1.4-1.8 s of pure DRIVER time per serve (round 16,
-        # guide §1.2 step 2). Render it as ONE SQL literal instead
-        # (repr round-trips IEEE doubles exactly, so the parsed
-        # literals — and every fold below — are bit-identical); the
-        # py4j path stays as the fallback for non-finite centroids,
-        # which SQL double literals cannot spell.
-        vecs = [bk.get((j, c), [0.0] * sub)
-                for j in range(num_subspaces) for c in range(n_codes)]
-        import math
-        if all(math.isfinite(v) for vec in vecs for v in vec):
-            flat = F.expr("array(" + ",".join(
-                "array(" + ",".join(f"{v!r}D" for v in vec) + ")"
-                for vec in vecs) + ")")
-        else:
-            flat = F.array(*[F.array(*[F.lit(v) for v in vec])
-                             for vec in vecs])
-        # wide-stored codes skip the pivot exchange entirely (round
-        # 16); long codes pivot here exactly as before — either way
-        # the frame below carries identical code values
-        wide = codes_to_wide(codes, id_col, num_subspaces).select(
-            F.col(id_col).alias("neighbor_id"),
-            *[F.col(f"c{j}").alias(f"__c{j}")
-              for j in range(num_subspaces)])
-        q = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("__qv"))
-        partials = F.array(*[
-            dot(F.slice(F.col("__qv"), j * sub + 1, sub),
-                F.element_at(flat, (F.lit(j * n_codes)
-                                    + F.col(f"__c{j}") + 1).cast("int")))
-            for j in range(num_subspaces)])
-        scored = (wide.crossJoin(F.broadcast(q))
-                  .where(F.col("query_id") != F.col("neighbor_id"))
-                  .select("query_id", "neighbor_id",
-                          F.aggregate(partials, F.lit(0.0),
-                                      lambda acc, x: acc + x)
-                          .alias("approx_dot")))
-    else:
-        q_parts = None
-        for j in range(num_subspaces):
-            qj = queries.select(
-                F.col(id_col).alias("query_id"),
-                F.slice(F.col(vec_col), j * sub + 1, sub).alias("__q"))
-            cb_j = codebooks.where(F.col("subspace") == j).select(
-                F.lit(j).alias("subspace"),
-                F.col("centroid_id").alias("code"),
-                F.col("centroid"))
-            part = (qj.crossJoin(cb_j)
-                    .select("query_id", "subspace", "code",
-                            dot(F.col("__q"), F.col("centroid"))
-                            .alias("partial")))
-            q_parts = part if q_parts is None else q_parts.unionByName(part)
-        scored = (_codes_long(codes, id_col, num_subspaces)
-                  .join(F.broadcast(q_parts), ["subspace", "code"])
-                  .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-                  .agg(F.sum("partial").alias("approx_dot"))
-                  .where(F.col("query_id") != F.col("neighbor_id")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_dot"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k))
+    against :func:`brute_force_topk`. ``codes`` may be long
+    (:func:`pq_encode`) or wide (the stored index)."""
+    return _adc_topk(codes, codebooks, queries, k, num_subspaces,
+                     vec_col, id_col, dim, "pq_topk")[0]
 
 
 def pq_topk_rerank(corpus: DataFrame, codes: DataFrame,
                    codebooks: DataFrame, queries: DataFrame, k: int = 10,
                    shortlist: int = 200, num_subspaces: int = 8,
                    vec_col: str = "embedding", id_col: str = "vec_id",
-                   dim: int = 64, fixed_order: bool = False) -> DataFrame:
+                   dim: int = 64) -> DataFrame:
     """PQ-shortlist + exact rerank — the production ANN pattern: the
     compressed-code scan (:func:`pq_topk`) nominates ``shortlist``
     candidates per query (cheap: 8-byte codes, broadcast distance
@@ -1068,16 +1036,15 @@ def pq_topk_rerank(corpus: DataFrame, codes: DataFrame,
 
     At 100 TB the full-vector fetch is a hash equi-join on the
     (query, neighbor) shortlist — corpus vectors never scan for
-    ranking, only for the bounded rerank."""
-    short = (pq_topk(codes, codebooks, queries, k=shortlist,
-                     num_subspaces=num_subspaces, vec_col=vec_col,
-                     id_col=id_col, dim=dim, fixed_order=fixed_order)
-             .select("query_id", "neighbor_id"))
+    ranking, only for the bounded rerank. The query vectors come from
+    the same driver-built frame as the distance tables, never from a
+    second scan of ``queries``."""
+    short, qvecs = _adc_topk(codes, codebooks, queries, shortlist,
+                             num_subspaces, vec_col, id_col, dim,
+                             "pq_topk_rerank")
     cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
                           F.col(vec_col).alias("__cv"))
-    qvecs = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("__qv"))
-    scored = (short
+    scored = (short.select("query_id", "neighbor_id")
               .join(cvecs, "neighbor_id")
               .join(F.broadcast(qvecs), "query_id")
               .select("query_id", "neighbor_id",
@@ -1241,20 +1208,24 @@ def write_pq_index(corpus: DataFrame, codebooks: DataFrame, path: str,
     by ADC without decompression; full vectors stay in the source
     table and are touched only by the bounded rerank join."""
     from aggregation_duckdb_spark import fsio
-    # stored WIDE — one (id, c0..c{m-1}) row per vector (round 16):
-    # ~8× fewer stored rows/bytes than the long form, and serving
-    # needs no per-query pivot exchange (guide §2.3/§6). The pivot of
-    # pq_encode's long rows carries identical code values bit-for-bit.
+    # stored WIDE — one (id, c0..c{m-1}) row per vector: ~8× fewer
+    # stored rows/bytes than the long form, and serving needs no
+    # per-query pivot exchange. The pivot of pq_encode's long rows
+    # carries identical code values bit-for-bit.
     codes = codes_to_wide(
         pq_encode(corpus, codebooks, num_subspaces, vec_col, id_col,
-                  dim), id_col, num_subspaces)
+                  dim), id_col, num_subspaces).withColumn(
+        "__ingest_batch", F.lit(-1))
     codebooks.write.mode("overwrite").parquet(
         fsio._join(path, "codebooks"))
-    (codes.withColumn("__ingest_batch", F.lit(-1))
-     .write.mode("overwrite").partitionBy("__ingest_batch")
+    (codes.write.mode("overwrite").partitionBy("__ingest_batch")
      .parquet(fsio._join(path, "codes")))
+    # the read schemas ride in the sidecar: a serve then plans its
+    # reads without Spark's one-job-per-read footer sampling
     fsio.write_json(corpus.sparkSession, fsio._join(path, "params.json"),
-                    {"num_subspaces": num_subspaces, "dim": dim})
+                    {"num_subspaces": num_subspaces, "dim": dim,
+                     "schemas": {"codebooks": codebooks.schema.jsonValue(),
+                                 "codes": codes.schema.jsonValue()}})
 
 
 def append_pq_index(new: DataFrame, path: str,
@@ -1292,44 +1263,50 @@ def append_pq_index(new: DataFrame, path: str,
         fsio.commit_ingest_watermark(spark, path, batch_id)
 
 
+def _read_pq_index(spark, path: str) -> tuple[dict, DataFrame, DataFrame]:
+    """(params, codebooks, codes) of a :func:`write_pq_index`
+    artifact, read under the schemas its sidecar records (artifacts
+    written without them fall back to inference)."""
+    from pyspark.sql.types import StructType
+
+    from aggregation_duckdb_spark import fsio
+    p = fsio.read_json(spark, fsio._join(path, "params.json"))
+
+    def read(name: str) -> DataFrame:
+        r = spark.read
+        if name in p.get("schemas", {}):
+            r = r.schema(StructType.fromJson(p["schemas"][name]))
+        return r.parquet(fsio._join(path, name))
+    return p, read("codebooks"), read("codes").drop("__ingest_batch")
+
+
 def pq_topk_indexed(spark, path: str, queries: DataFrame, k: int = 10,
                     vec_col: str = "embedding",
-                    id_col: str = "vec_id",
-                    fixed_order: bool = False) -> DataFrame:
+                    id_col: str = "vec_id") -> DataFrame:
     """ADC top-k served from the persisted PQ index: the stored
     codebooks build each query's broadcast distance table, the stored
     code rows are the only corpus-sized scan. Identical math to
     :func:`pq_topk` over the same codes (pytest-pinned equal)."""
-    from aggregation_duckdb_spark import fsio
-    p = fsio.read_json(spark, fsio._join(path, "params.json"))
-    books = spark.read.parquet(fsio._join(path, "codebooks"))
-    codes = (spark.read.parquet(fsio._join(path, "codes"))
-             .drop("__ingest_batch"))
+    p, books, codes = _read_pq_index(spark, path)
     return pq_topk(codes, books, queries, k=k,
                    num_subspaces=p["num_subspaces"], vec_col=vec_col,
-                   id_col=id_col, dim=p["dim"], fixed_order=fixed_order)
+                   id_col=id_col, dim=p["dim"])
 
 
 def pq_topk_rerank_indexed(spark, path: str, corpus: DataFrame,
                            queries: DataFrame, k: int = 10,
                            shortlist: int = 200,
                            vec_col: str = "embedding",
-                           id_col: str = "vec_id",
-                           fixed_order: bool = False) -> DataFrame:
+                           id_col: str = "vec_id") -> DataFrame:
     """Shortlist-from-index + exact rerank: the stored codes nominate,
     the source table's full vectors re-score only the bounded
     shortlist — the production serving path over the persisted
     artifact."""
-    from aggregation_duckdb_spark import fsio
-    p = fsio.read_json(spark, fsio._join(path, "params.json"))
-    books = spark.read.parquet(fsio._join(path, "codebooks"))
-    codes = (spark.read.parquet(fsio._join(path, "codes"))
-             .drop("__ingest_batch"))
+    p, books, codes = _read_pq_index(spark, path)
     return pq_topk_rerank(corpus, codes, books, queries, k=k,
                           shortlist=shortlist,
                           num_subspaces=p["num_subspaces"],
-                          vec_col=vec_col, id_col=id_col, dim=p["dim"],
-                          fixed_order=fixed_order)
+                          vec_col=vec_col, id_col=id_col, dim=p["dim"])
 
 
 def ivf_index_health(spark, path: str, vec_col: str = "embedding",

@@ -1384,8 +1384,10 @@ def read_zordered_box(spark: SparkSession, path: str,
     time (PartitionFilters in explain — never listed, never read);
     the exact box filter keeps row-level semantics identical to a
     full-scan filter (results are provably equal: the bucket list is
-    a superset of every bucket the box can touch). ``version`` pins
-    a time-travel snapshot."""
+    a superset of every bucket the box can touch), and the snapshot's
+    outstanding delta batches are filtered by the box too (see
+    :func:`read_zordered_box_nd`). ``version`` pins a time-travel
+    snapshot."""
     if manifest is None:
         manifest = read_manifest(spark, path, version)
     dims = _spec_dims(manifest["spec"])
@@ -1405,7 +1407,12 @@ def read_zordered_box_nd(spark: SparkSession, path: str,
     list prunes partition directories at plan time, the exact range
     filters keep row-level semantics identical to a full-scan filter
     (the bucket list is a superset of every bucket the box can
-    touch)."""
+    touch). The read snapshot's outstanding delta batches (unrouted
+    until compaction, ``zbucket`` null) are read in full under the
+    same range filters — they are small between compactions, the
+    layered-layout contract — and the snapshot's tombstones hide keys
+    in both areas, so the result equals :func:`read_zordered` under
+    the same filter."""
     if manifest is None:
         manifest = read_manifest(spark, path, version)
     # range keys may be logical (post-rename) names; planning and row
@@ -1416,10 +1423,13 @@ def read_zordered_box_nd(spark: SparkSession, path: str,
     # results never depend on the coercion (only the pruning superset)
     planned = _coerce_ranges(spark, manifest["spec"], ranges)
     buckets = zbuckets_for_ranges(manifest["spec"], planned)
-    out = _read_live(spark, path, manifest, buckets)
+    out = _read_live(spark, path, manifest, buckets).drop("gen")
+    for d in manifest.get("deltas", []):
+        out = out.unionByName(_read_delta_batch(spark, path, manifest, d),
+                              allowMissingColumns=True)
     for c, (lo, hi) in ranges.items():
         out = out.where((F.col(c) >= lo) & (F.col(c) <= hi))
-    out = _apply_tombstones(spark, path, manifest, out.drop("gen"))
+    out = _apply_tombstones(spark, path, manifest, out)
     return _rename_logical(manifest, out)
 
 
@@ -1954,25 +1964,10 @@ def read_zordered_box_dirs(spark: SparkSession, path: str,
 def read_zordered_box_with_delta(spark: SparkSession, path: str,
                                  a_lo: int, a_hi: int, b_lo: int,
                                  b_hi: int) -> DataFrame:
-    """Box read over the layered table: the clustered main area reads
-    through the pruned-bucket path; any delta batches are filtered by
-    the box alone (they are small between compactions — that is the
-    contract). Results equal a full-scan filter over main ∪ delta."""
-    manifest = read_manifest(spark, path)
-    dims = _spec_dims(manifest["spec"])
-    out = read_zordered_box(spark, path, a_lo, a_hi, b_lo, b_hi, manifest)
-    out = out.drop("zbucket")
-    a, b = F.col(dims[0][0]), F.col(dims[1][0])   # deltas are physical
-    for d in manifest.get("deltas", []):
-        dd = (_read_delta_batch(spark, path, manifest, d)
-              .where((a >= a_lo) & (a <= a_hi)
-                     & (b >= b_lo) & (b <= b_hi)))
-        # the box read already hid tombstoned keys in the main area;
-        # delta batches carry them too until the next compaction
-        dd = _apply_tombstones(spark, path, manifest, dd)
-        out = out.unionByName(_rename_logical(manifest, dd),
-                              allowMissingColumns=True)
-    return out
+    """:func:`read_zordered_box` of the latest snapshot, for callers
+    that want no ``zbucket`` column."""
+    return read_zordered_box(spark, path, a_lo, a_hi, b_lo,
+                             b_hi).drop("zbucket")
 
 
 def upsert_zordered(df: DataFrame, path: str, key_cols: list[str],

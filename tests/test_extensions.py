@@ -1122,6 +1122,136 @@ def test_pq_index_matches_live_and_appends(spark, sf_dir, tmp_path):
         sorted(map(key, live_rr.collect()))
 
 
+def _seq_dot(a, b) -> float:
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def _pq_reference(corpus, codes, books, queries, k, shortlist, sub):
+    """Plain-Python PQ search: each ADC score folds the per-subspace
+    partials left to right in subspace order (each partial itself a
+    left-to-right fold); candidates rank by score descending — NaN
+    above every double, as Spark orders it — then id ascending; the
+    shortlist is reranked by the sequential cosine fold. Returns the
+    ADC top-k and the reranked top-k as (query_id, rank, neighbor_id,
+    score) rows."""
+    import math
+
+    def desc(score, nid):
+        nan = math.isnan(score)
+        return (not nan, 0.0 if nan else -score, nid)
+
+    def ranked(scores, n):
+        top = sorted(scores, key=lambda i: desc(scores[i], i))[:n]
+        return [(i, scores[i]) for i in top]
+
+    adc, rerank = [], []
+    for qid, q in queries:
+        approx = {}
+        for nid, cs in codes.items():
+            if nid != qid:
+                acc = 0.0
+                for j, c in enumerate(cs):
+                    acc = acc + _seq_dot(q[j * sub:(j + 1) * sub],
+                                         books[(j, c)])
+                approx[nid] = acc
+        adc += [(qid, r + 1, n, s)
+                for r, (n, s) in enumerate(ranked(approx, k))]
+        cos = {n: _seq_dot(q, corpus[n])
+               / (math.sqrt(_seq_dot(q, q))
+                  * math.sqrt(_seq_dot(corpus[n], corpus[n])))
+               for n, _ in ranked(approx, shortlist)}
+        rerank += [(qid, r + 1, n, s)
+                   for r, (n, s) in enumerate(ranked(cos, k))]
+    return sorted(adc), sorted(rerank)
+
+
+def test_pq_search_matches_numpy_reference(spark, tmp_path):
+    """pq_topk and pq_topk_rerank(_indexed) against the plain-Python
+    fixed-order ADC + cosine reference, with a query frame built from
+    Python rows: scores agree exactly with sparse centroid ids and
+    with non-finite centroids (NaN and inf partials rank as Spark
+    orders them); null, ragged or null-element query vectors raise
+    the fixed-dim contract error."""
+    import numpy as np
+    dim, m, sub, k, shortlist = 16, 4, 4, 5, 12
+    rng = np.random.default_rng(7)
+    vschema = "vec_id long, embedding array<double>"
+    corpus_rows = [(i, [float(x) for x in v])
+                   for i, v in enumerate(rng.standard_normal((40, dim)))]
+    corpus_d = dict(corpus_rows)
+    corpus = spark.createDataFrame(corpus_rows, vschema)
+    qrows = [(3, corpus_d[3]),
+             (17, [x + 0.1 for x in corpus_d[17]]),
+             (1000, [float(x) for x in rng.standard_normal(dim)])]
+    queries = spark.createDataFrame(qrows, vschema)
+    cids = [2, 9, 30]                                    # sparse ids
+    cents = {(j, c): [float(x) for x in rng.standard_normal(sub)]
+             for j in range(m) for c in cids}
+
+    def books_df(cb):
+        return spark.createDataFrame(
+            [(j, c, v) for (j, c), v in sorted(cb.items())],
+            "subspace long, centroid_id long, centroid array<double>")
+
+    def rows(df, score):
+        return sorted((r.query_id, r.rank, r.neighbor_id, r[score])
+                      for r in df.collect())
+
+    def same(got, want):
+        def norm(rs):
+            return [(q, r, n, "nan" if s != s else s)
+                    for q, r, n, s in rs]
+        assert norm(got) == norm(want)
+
+    # sparse centroid ids, served from the persisted index
+    books = books_df(cents)
+    path = str(tmp_path / "pq_ref")
+    S.write_pq_index(corpus, books, path, num_subspaces=m, dim=dim)
+    stored = {r.vec_id: [r[f"c{j}"] for j in range(m)]
+              for r in spark.read.parquet(path + "/codes").collect()}
+    assert {c for cs in stored.values() for c in cs} <= set(cids)
+    want_top, want_rr = _pq_reference(corpus_d, stored, cents, qrows,
+                                      k, shortlist, sub)
+    same(rows(S.pq_topk(S.pq_encode(corpus, books, m, dim=dim), books,
+                        queries, k=k, num_subspaces=m, dim=dim),
+              "approx_dot"), want_top)
+    same(rows(S.pq_topk_rerank_indexed(spark, path, corpus, queries,
+                                       k=k, shortlist=shortlist),
+              "cosine_sim"), want_rr)
+
+    # non-finite centroids: hand-built wide codes point at them
+    bad = dict(cents)
+    bad[(1, 9)] = [float("inf"), 0.5, -0.5, 1.0]
+    bad[(2, 30)] = [0.25, float("nan"), 0.0, 1.0]
+    codes = {i: [cids[(i + j) % 3] for j in range(m)] for i in range(40)}
+    codes_df = spark.createDataFrame(
+        [(i, *cs) for i, cs in codes.items()],
+        "vec_id long, " + ", ".join(f"c{j} long" for j in range(m)))
+    want_top, want_rr = _pq_reference(corpus_d, codes, bad, qrows,
+                                      k, shortlist, sub)
+    assert any(s != s for *_, s in want_top)       # NaN scores rank
+    same(rows(S.pq_topk(codes_df, books_df(bad), queries, k=k,
+                        num_subspaces=m, dim=dim), "approx_dot"),
+         want_top)
+    same(rows(S.pq_topk_rerank(corpus, codes_df, books_df(bad), queries,
+                               k=k, shortlist=shortlist, num_subspaces=m,
+                               dim=dim), "cosine_sim"), want_rr)
+
+    # null, ragged and null-element query vectors break the contract
+    for bad_q in ((5, None), (5, [0.0] * (dim - 1)),
+                  (5, [None] + [0.0] * (dim - 1))):
+        qdf = spark.createDataFrame([bad_q], vschema)
+        with pytest.raises(Exception, match="fixed-dim non-null contract"):
+            S.pq_topk(codes_df, books, qdf, k=k, num_subspaces=m,
+                      dim=dim).collect()
+        with pytest.raises(Exception, match="fixed-dim non-null contract"):
+            S.pq_topk_rerank_indexed(spark, path, corpus, qdf,
+                                     k=k).collect()
+
+
 def test_pq_fit_joint_bit_equals_sequential(spark, sf_dir):
     """pq_fit_joint (one Lloyd job per iteration across ALL subspaces)
     must reproduce pq_fit's codebooks bit-for-bit: same md5 seed ids,

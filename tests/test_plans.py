@@ -323,10 +323,14 @@ def test_partitioned_pruning_filter_reaches_partitions(spark, sf_dir):
 
 
 def test_pq_scan_broadcasts_distance_table(spark, sf_dir):
-    """ADC ranking: the query×codebook distance table must broadcast
-    to the code scan (corpus vectors never move for ranking), the
-    per-subspace encode is a zero-shuffle map pass."""
+    """ADC ranking: the driver-built query×codebook distance tables
+    broadcast to the code scan as ONE local frame — exactly one
+    BroadcastNestedLoopJoin (corpus vectors never move for ranking,
+    never a cartesian), and a query set built from Python rows is not
+    re-scanned at execution (no Scan ExistingRDD); the per-subspace
+    encode is a zero-shuffle map pass."""
     from aggregation_duckdb_spark.operators import similarity as S
+    from aggregation_duckdb_spark.plans import physical_plan
     emb = load_table(spark, "embeddings", sf_dir)
     cents = S.label_centroids(emb)   # any deterministic codebook shape
     books = None
@@ -338,8 +342,15 @@ def test_pq_scan_broadcasts_distance_table(spark, sf_dir):
         books = cb if books is None else books.unionByName(cb)
     codes = S.pq_encode(emb, books, num_subspaces=8)
     assert count_shuffles(codes) == 0
-    top = S.pq_topk(codes, books, emb.limit(5), k=5, num_subspaces=8)
-    assert_broadcast_join(top, at_least=1)
+    queries = spark.createDataFrame(
+        [(r.vec_id, [float(x) for x in r.embedding])
+         for r in emb.orderBy("vec_id").limit(5).collect()],
+        "vec_id long, embedding array<double>")
+    top = S.pq_topk(codes, books, queries, k=5, num_subspaces=8)
+    plan = physical_plan(top, "simple")
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
+    assert "CartesianProduct" not in plan
+    assert "ExistingRDD" not in plan, plan
     assert_no_row_python_udf(top)
 
 

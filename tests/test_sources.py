@@ -294,6 +294,43 @@ def test_zorder_delta_append_and_compaction(spark, tmp_path):
         assert got2 == got
 
 
+def test_zorder_box_reads_include_uncompacted_deltas(spark, tmp_path):
+    """Every box read sees the rows an append left in the delta area —
+    equal to a full-scan filter with no compaction in between — and a
+    read pinned to the version before the append still excludes
+    them."""
+    from aggregation_duckdb_spark.sources import layout as L
+    base = _zorder_frame(spark)
+    path = str(tmp_path / "z_box_delta")
+    L.write_zordered(base, path, "a", "b", bits=7, bucket_bits=4)
+    v1 = L.table_version(spark, path)
+    extra = spark.range(8000, 9000).select(
+        (F.col("id") % 997).alias("a"),
+        ((F.col("id") * 37) % 613).alias("b"),
+        F.col("id").alias("payload"))
+    L.append_zordered(extra, path)
+    assert L.read_manifest(spark, path)["deltas"]
+    box = (100, 400, 50, 300)
+
+    def rows(df):
+        return sorted((r.a, r.b, r.payload)
+                      for r in df.select("a", "b", "payload").collect())
+
+    def in_box(df):
+        return rows(df.where(F.col("a").between(*box[:2])
+                             & F.col("b").between(*box[2:])))
+
+    want = in_box(base.unionByName(extra))
+    assert any(p >= 8000 for _, _, p in want)
+    assert in_box(L.read_zordered(spark, path)) == want
+    assert rows(L.read_zordered_box(spark, path, *box)) == want
+    assert rows(L.read_zordered_box_nd(
+        spark, path, {"a": box[:2], "b": box[2:]})) == want
+    assert rows(L.read_zordered_box_with_delta(spark, path, *box)) == want
+    assert rows(L.read_zordered_box(spark, path, *box, version=v1)) == \
+        in_box(base)
+
+
 def test_zorder_append_many_one_commit_k_deltas(spark, tmp_path):
     """append_zordered_many must be byte-equivalent to K sequential
     appends — K distinct delta directories, identical visible rows,
