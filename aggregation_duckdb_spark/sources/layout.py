@@ -77,9 +77,10 @@ Concurrency contract by verb pair (pytest-pinned where marked *):
   touched buckets' generations, and every folded delta/tombstone
   batch are untouched in latest* (disjoint-bucket upserts both
   land*); otherwise CommitConflict* (two upserts dirtying one
-  bucket*). An upsert composing over tombstones additionally
+  bucket*). An upsert/merge composing over tombstones additionally
   requires the outstanding tombstone set unchanged* (a concurrent
-  delete must not be resurrected).
+  delete must not be resurrected). All five commit through one
+  engine, :func:`_rewrite_buckets`.
 - ``write`` (CREATE OR REPLACE) and ``restore``: last-writer-wins by
   declaration — they name the whole table state.
 - ``vacuum_zordered``: not manifest-committed; run it quiesced, or
@@ -119,7 +120,6 @@ file counts sane.
 from __future__ import annotations
 
 import json
-import os
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -143,6 +143,10 @@ CHANGES_DIR = "_changes"
 # explicit 4 — auto is for callers who don't know their table's
 # scale class up front.
 AUTO_BUCKET_TARGET_BYTES = 256 << 30
+
+# incremental compaction pins an outstanding delta backlog below this
+# many bytes, so its dirtied-bucket census and its rewrite read it once
+COMPACT_MATERIALIZE_BYTES = 256 << 20
 
 
 def _bits_for_bytes(est_bytes: int) -> int:
@@ -580,75 +584,122 @@ def _commit(spark: SparkSession, path: str, manifest: dict | None,
     raise AssertionError("unreachable")
 
 
-def _rebase_bucket_rewrite(latest: dict, base: dict, touched,
-                           survivors, gen: str, new_stats: dict,
-                           op: str, folded_deltas=(),
-                           folded_tombstones=(),
-                           require_tombstones_unchanged: bool = False,
-                           gen_cols: list[str] | None = None) -> dict:
-    """Merge a bucket-rewrite mutation (its generations computed and
-    written against ``base``) onto ``latest`` after a commit
-    collision. Safe iff everything the rewrite DEPENDED ON is
-    untouched: the spec, the prior generation of every touched
-    bucket, and any delta/tombstone batches it folded; anything else
-    a concurrent committer changed (new deltas, new tombstones,
-    other buckets' generations) carries through unchanged — exactly
-    the WriteSerializable merge rule (blind appends and disjoint
-    rewrites both land; overlapping rewrites conflict)."""
-    if latest.get("spec") != base.get("spec"):
-        _conflict(op, latest, "changed the layout spec")
-    lg, bg = latest.get("gens", {}), base.get("gens", {})
-    for k in touched:
-        if lg.get(str(k)) != bg.get(str(k)):
-            _conflict(op, latest, f"rewrote bucket {k}")
-    for d in folded_deltas:
-        if d not in latest.get("deltas", []):
-            _conflict(op, latest, f"already folded delta batch {d}")
-    for t in folded_tombstones:
-        if t not in latest.get("tombstones", []):
-            _conflict(op, latest, f"already folded tombstone batch {t}")
-    if require_tombstones_unchanged and \
-            latest.get("tombstones", []) != base.get("tombstones", []):
-        _conflict(op, latest, "changed the outstanding tombstone set")
-    out = dict(latest)
-    out.pop("change_file", None)   # per-commit field, never inherited
-    gens, stats = dict(lg), dict(latest.get("stats", {}))
-    for k in touched:
-        stats.pop(str(k), None)
-        if k in survivors:
-            gens[str(k)] = gen
+def _commit_and_clean(spark: SparkSession, path: str, base: dict | None,
+                      manifest: dict, op: str, base_version: int, rebase,
+                      metrics: dict, vacuum: bool) -> tuple[int, dict]:
+    """The tail every data-rewriting commit shares: :func:`_commit`,
+    then — with ``vacuum`` — delete what the committed manifest no
+    longer references, advance the min-live marker and prune old
+    manifest versions. Cleanup runs strictly after the commit, so a
+    crash in it leaves only invisible orphans."""
+    v, final = _commit(spark, path, manifest, op, base_version,
+                       rebase=rebase, metrics=metrics)
+    if vacuum and base is not None:
+        _cleanup_superseded(spark, path, base, final)
+        _set_min_live_version(spark, path, v)
+        fsio.prune_versions(spark, _manifest_path(path))
+    return v, final
+
+
+def _rewrite_buckets(spark: SparkSession, path: str, base_version: int,
+                     base: dict, dirtied: list[int], rows: DataFrame,
+                     op: str, files_per_bucket: int, vacuum: bool,
+                     remaining: DataFrame | None = None,
+                     changes: DataFrame | None = None) -> tuple[int, dict]:
+    """The one bucket-rewrite engine (compaction, merge/upsert,
+    optimize, box delete): ``rows`` — the complete new contents of the
+    ``dirtied`` buckets of snapshot ``base``, every outstanding delta
+    and tombstone batch of ``base`` already folded in — land as ONE new
+    generation; the zone maps, row counts and column set come from the
+    written bytes; the manifest flips; superseded directories go.
+
+    ``remaining`` (tombstoned keys still hidden after the rewrite)
+    replaces the tombstone set with one batch, or empties it when it
+    has no rows. ``changes`` becomes the commit's stored change file.
+    Returns ``(version, committed manifest)``.
+
+    On a commit collision the rewrite merges onto the latest snapshot
+    iff everything it depended on is untouched there: the spec, the
+    generation of every dirtied bucket, every folded delta and
+    tombstone batch — and, when it rewrites the tombstone set, that
+    whole set (a concurrent delete must not be resurrected). What else
+    a competitor changed (new deltas, new tombstones, other buckets)
+    carries through: blind appends and disjoint rewrites both land,
+    overlapping rewrites raise :class:`CommitConflict` naming the
+    competitor."""
+    folded_deltas = list(base.get("deltas", []))
+    folded_tombs = list(base.get("tombstones", []))
+    remaining_name = None if remaining is None else \
+        _write_nonempty(remaining, path, TOMBSTONE_DIR, "t")
+    change_name = None if changes is None else \
+        _write_nonempty(changes, path, CHANGES_DIR, "c")
+    spec = base["spec"]
+    gen = _new_gen()
+    _write_clustered(rows, fsio._join(path, DATA_DIR), spec, gen,
+                     files_per_bucket)
+    written, stats, gen_cols = _written_meta(spark, path, gen, spec)
+    survivors = set(written)
+
+    def rebase(latest: dict) -> dict:
+        if latest.get("spec") != spec:
+            _conflict(op, latest, "changed the layout spec")
+        lg, bg = latest.get("gens", {}), base.get("gens", {})
+        for k in dirtied:
+            if lg.get(str(k)) != bg.get(str(k)):
+                _conflict(op, latest, f"rewrote bucket {k}")
+        for d in folded_deltas:
+            if d not in latest.get("deltas", []):
+                _conflict(op, latest, f"already folded delta batch {d}")
+        for t in folded_tombs:
+            if t not in latest.get("tombstones", []):
+                _conflict(op, latest,
+                          f"already folded tombstone batch {t}")
+        if remaining is not None and \
+                latest.get("tombstones", []) != folded_tombs:
+            _conflict(op, latest, "changed the outstanding tombstone set")
+        out = dict(latest)
+        out.pop("change_file", None)   # per-commit field, never inherited
+        gens, all_stats = dict(lg), dict(latest.get("stats", {}))
+        for k in dirtied:
+            all_stats.pop(str(k), None)
+            if k in survivors:
+                gens[str(k)] = gen
+            else:
+                gens.pop(str(k), None)   # emptied: drops out entirely
+        all_stats.update(stats)
+        out["gens"], out["stats"] = gens, all_stats
+        # per-generation column sets (schema evolution) and foreign
+        # data roots (shallow clones) follow their generations: a
+        # rewritten bucket's new generation is local, so its old root
+        # entry dies with the old generation
+        live = set(gens.values())
+        gcols = {**base.get("gen_columns", {}),
+                 **latest.get("gen_columns", {}), gen: gen_cols}
+        out["gen_columns"] = {g: c for g, c in gcols.items() if g in live}
+        groots = {g: r for g, r in {**base.get("gen_roots", {}),
+                                    **latest.get("gen_roots", {})}.items()
+                  if g in live}
+        if groots:
+            out["gen_roots"] = groots
         else:
-            gens.pop(str(k), None)
-    stats.update(new_stats)
-    out["gens"], out["stats"] = gens, stats
-    # per-generation column sets (schema evolution): carry entries for
-    # generations still live, record the new generation's
-    gcols = {**base.get("gen_columns", {}),
-             **latest.get("gen_columns", {})}
-    if gen_cols is not None:
-        gcols[gen] = gen_cols
-    live = set(gens.values())
-    out["gen_columns"] = {g: c for g, c in gcols.items() if g in live}
-    # foreign data roots (shallow clones): entries follow their
-    # generations — a rewritten bucket's new generation is local, so
-    # its old root entry dies with the old generation
-    groots = {**base.get("gen_roots", {}), **latest.get("gen_roots", {})}
-    groots = {g: r for g, r in groots.items() if g in live}
-    if groots:
-        out["gen_roots"] = groots
-    else:
-        out.pop("gen_roots", None)
-    if folded_deltas:
-        fd = set(folded_deltas)
+            out.pop("gen_roots", None)
         out["deltas"] = [d for d in latest.get("deltas", [])
-                         if d not in fd]
-    if folded_tombstones:
-        ft = set(folded_tombstones)
-        tt = [t for t in latest.get("tombstones", []) if t not in ft]
-        out["tombstones"] = tt
-        if not tt:
+                         if d not in folded_deltas]
+        tombs = [t for t in latest.get("tombstones", [])
+                 if t not in folded_tombs]
+        if remaining_name is not None:
+            tombs = [remaining_name]
+        out["tombstones"] = tombs
+        if not tombs:
             out.pop("tombstone_key", None)
-    return out
+        if changes is not None:
+            out["change_file"] = change_name
+        return out
+
+    return _commit_and_clean(
+        spark, path, base, rebase(base), op, base_version, rebase,
+        _rewrite_metrics(dirtied, stats, deltas_folded=len(folded_deltas),
+                         tombstones_folded=len(folded_tombs)), vacuum)
 
 
 def version_at_timestamp(spark: SparkSession, path: str,
@@ -863,12 +914,8 @@ def _write_table(df: DataFrame, path: str, spec: dict,
                     _conflict("recluster", latest,
                               "changed table state mid-rebuild")
             return manifest
-    v, final = _commit(spark, path, manifest, "write", prev_v,
-                       rebase=rebase,
-                       metrics=_rewrite_metrics(buckets, stats))
-    if prev is not None and vacuum:
-        _cleanup_superseded(spark, path, prev, final)
-        _set_min_live_version(spark, path, v)
+    _commit_and_clean(spark, path, prev, manifest, "write", prev_v,
+                      rebase, _rewrite_metrics(buckets, stats), vacuum)
     return spec
 
 
@@ -1347,10 +1394,68 @@ def _logical_columns(spark: SparkSession, path: str,
     return {ren.get(c, c) for c in phys}
 
 
+def _read_deltas(spark: SparkSession, path: str, manifest: dict,
+                 row_filter: Column | None = None,
+                 names: list[str] | None = None) -> DataFrame | None:
+    """The union of the snapshot's outstanding delta batches (or just
+    ``names`` among them) in physical names — DROP + ADD resolved,
+    schema-evolving batches aligned with nulls — each under
+    ``row_filter``; None when there are none."""
+    out = None
+    for d in manifest.get("deltas", []) if names is None else names:
+        dd = _read_delta_batch(spark, path, manifest, d)
+        if row_filter is not None:
+            dd = dd.where(row_filter)
+        out = dd if out is None else \
+            out.unionByName(dd, allowMissingColumns=True)
+    return out
+
+
+def _read_snapshot(spark: SparkSession, path: str, manifest: dict,
+                   buckets: list[int] | None = None,
+                   row_filter: Column | None = None,
+                   deltas: DataFrame | None = None,
+                   tomb: DataFrame | None = None) -> DataFrame:
+    """The VISIBLE rows of a snapshot in physical names — the one read
+    path behind every public read and every bucket rewrite: the live
+    generations of ``buckets`` (all when None) plus every outstanding
+    delta batch, both under ``row_filter``, with tombstoned keys
+    hidden over the union. ``gen`` is dropped; ``zbucket`` is null on
+    delta rows (unrouted until compaction). ``deltas`` / ``tomb`` pass
+    in the delta union (:func:`_read_deltas`) and tombstone keys
+    (:func:`_tombstone_keys`) a caller already read for this snapshot,
+    so their batches are not listed and inferred twice."""
+    out = _read_live(spark, path, manifest, buckets).drop("gen")
+    if row_filter is not None:
+        out = out.where(row_filter)
+    if deltas is None:
+        deltas = _read_deltas(spark, path, manifest, row_filter)
+    if deltas is not None:
+        out = out.unionByName(deltas, allowMissingColumns=True)
+    if tomb is None:
+        tomb = _tombstone_keys(spark, path, manifest)
+    if tomb is not None:
+        out = out.join(tomb, manifest["tombstone_key"], "left_anti")
+    return out
+
+
+def _conj(preds: list[Column]) -> Column | None:
+    """AND of ``preds`` (None when empty)."""
+    out = None
+    for p in preds:
+        out = p if out is None else out & p
+    return out
+
+
+def _in_ranges(ranges: dict) -> Column | None:
+    """Conjunctive inclusive range predicate ``lo <= col <= hi``."""
+    return _conj([(F.col(c) >= lo) & (F.col(c) <= hi)
+                  for c, (lo, hi) in ranges.items()])
+
+
 def read_zordered(spark: SparkSession, path: str,
                   manifest: dict | None = None,
                   version: int | None = None,
-                  include_deltas: bool = True,
                   _logical: bool = True) -> DataFrame:
     """Full-scan read of the table snapshot — latest by default, a
     pinned time-travel snapshot with ``version`` (every live
@@ -1358,20 +1463,12 @@ def read_zordered(spark: SparkSession, path: str,
     snapshot's outstanding delta batches are INCLUDED (``zbucket`` is
     null for their rows — they are unrouted until compaction): a
     full-table read never silently misses appended rows.
-    ``include_deltas=False`` reads the clustered main area alone (what
-    compaction's own rebuild wants, since it folds deltas itself).
     Columns come back under the snapshot's LOGICAL names (renames
     from :func:`alter_zordered` applied; ``_logical=False`` is the
     internal physical-name view rewrites and diffs use)."""
     if manifest is None:
         manifest = read_manifest(spark, path, version)
-    out = _read_live(spark, path, manifest).drop("gen")
-    if include_deltas:
-        for d in manifest.get("deltas", []):
-            out = out.unionByName(
-                _read_delta_batch(spark, path, manifest, d),
-                allowMissingColumns=True)
-    out = _apply_tombstones(spark, path, manifest, out)
+    out = _read_snapshot(spark, path, manifest)
     return _rename_logical(manifest, out) if _logical else out
 
 
@@ -1423,14 +1520,32 @@ def read_zordered_box_nd(spark: SparkSession, path: str,
     # results never depend on the coercion (only the pruning superset)
     planned = _coerce_ranges(spark, manifest["spec"], ranges)
     buckets = zbuckets_for_ranges(manifest["spec"], planned)
-    out = _read_live(spark, path, manifest, buckets).drop("gen")
-    for d in manifest.get("deltas", []):
-        out = out.unionByName(_read_delta_batch(spark, path, manifest, d),
-                              allowMissingColumns=True)
-    for c, (lo, hi) in ranges.items():
-        out = out.where((F.col(c) >= lo) & (F.col(c) <= hi))
-    out = _apply_tombstones(spark, path, manifest, out)
-    return _rename_logical(manifest, out)
+    return _rename_logical(manifest, _read_snapshot(
+        spark, path, manifest, buckets, _in_ranges(ranges)))
+
+
+def _add_deltas(m: dict, base_spec: dict, batches: list[DataFrame],
+                names: list[str], op: str) -> dict:
+    """Snapshot ``m`` with delta batches ``names`` appended — the blind
+    append's rebase rule. The batches were CHECK-validated against
+    ``base_spec``, so a layout-spec change since conflicts, unless
+    only the ``check`` clause changed: then the batches are
+    re-validated against the new constraint and land iff they still
+    pass."""
+    if m["spec"] != base_spec:
+        if {k: v for k, v in m["spec"].items() if k != "check"} != \
+                {k: v for k, v in base_spec.items() if k != "check"}:
+            _conflict(op, m, "changed the layout spec (batch was "
+                      "validated against the old table)")
+        try:
+            for d in batches:
+                _validate_check(d, m["spec"], op)
+        except ValueError as e:
+            _conflict(op, m, f"tightened the CHECK constraint ({e})")
+    out = dict(m)
+    out.pop("change_file", None)   # per-commit, never inherited
+    out["deltas"] = list(m.get("deltas", [])) + names
+    return out
 
 
 def append_zordered(df: DataFrame, path: str,
@@ -1490,23 +1605,7 @@ def append_zordered(df: DataFrame, path: str,
     def build(m: dict) -> dict | None:
         if batch_id is not None and batch_id <= m.get("last_batch_id", -1):
             return None  # a replay racer committed this id first
-        if m["spec"] != base_spec:
-            only_check = ({k: v for k, v in m["spec"].items()
-                           if k != "check"}
-                          == {k: v for k, v in base_spec.items()
-                              if k != "check"})
-            if not only_check:
-                _conflict("append_zordered", m, "changed the layout "
-                          "spec (batch was validated against the old "
-                          "table)")
-            try:
-                _validate_check(df, m["spec"], "append_zordered")
-            except ValueError as e:
-                _conflict("append_zordered", m,
-                          f"tightened the CHECK constraint ({e})")
-        out = dict(m)
-        out.pop("change_file", None)   # per-commit, never inherited
-        out["deltas"] = list(m.get("deltas", [])) + [name]
+        out = _add_deltas(m, base_spec, [df], [name], "append_zordered")
         if batch_id is not None:
             out["last_batch_id"] = int(batch_id)
         return out
@@ -1518,11 +1617,10 @@ def append_zordered(df: DataFrame, path: str,
 def append_zordered_many(dfs: list[DataFrame], path: str) -> None:
     """Append K batches as K delta directories in ONE write job and
     ONE manifest commit — the bulk-backlog form of
-    :func:`append_zordered` (round 16, guide §6: K separate appends
-    pay K write jobs plus K commit round-trips for what is one
-    logical ingest step; a nightly backlog of micro-batches should
-    amortize both). Each input frame becomes its OWN delta batch
-    directory, byte-equivalent to K sequential appends: reads,
+    :func:`append_zordered`: K separate appends pay K write jobs plus
+    K commit round-trips for what is one logical ingest step, and a
+    backlog of micro-batches amortizes both here. Each input frame
+    becomes its OWN delta batch directory, byte-equivalent to K sequential appends: reads,
     compaction, and the change feed see K distinct deltas landing in
     one commit (the feed's append path already unions every delta
     NEW to a commit).
@@ -1584,27 +1682,9 @@ def append_zordered_many(dfs: list[DataFrame], path: str) -> None:
     if not names:
         return                           # all batches empty: no-op
 
-    def build(m: dict) -> dict | None:
-        if m["spec"] != base_spec:
-            only_check = ({k: v for k, v in m["spec"].items()
-                           if k != "check"}
-                          == {k: v for k, v in base_spec.items()
-                              if k != "check"})
-            if not only_check:
-                _conflict("append_zordered_many", m,
-                          "changed the layout spec (batches were "
-                          "validated against the old table)")
-            try:
-                for d in phys:
-                    _validate_check(d, m["spec"],
-                                    "append_zordered_many")
-            except ValueError as e:
-                _conflict("append_zordered_many", m,
-                          f"tightened the CHECK constraint ({e})")
-        out = dict(m)
-        out.pop("change_file", None)   # per-commit, never inherited
-        out["deltas"] = list(m.get("deltas", [])) + names
-        return out
+    def build(m: dict) -> dict:
+        return _add_deltas(m, base_spec, phys, names,
+                           "append_zordered_many")
 
     _commit(spark, path, build(manifest), "append", base_v,
             rebase=build,
@@ -1803,162 +1883,118 @@ def compact_zordered(spark: SparkSession, path: str,
     ``vacuum=False`` keeps superseded directories and manifests so
     prior versions stay time-travel-readable until
     :func:`vacuum_zordered`."""
+    if mode not in ("incremental", "full"):
+        raise ValueError(f"mode must be 'incremental' or 'full': {mode}")
     base_v, manifest = _latest(spark, path)
     spec = manifest["spec"]
     deltas = list(manifest.get("deltas", []))
-    tomb_keys = _tombstone_keys(spark, path, manifest)
-    if not deltas and tomb_keys is None and mode != "full":
+    if mode == "full":
+        return _compact_full(spark, path, base_v, manifest,
+                             files_per_bucket, vacuum)
+    tomb = _tombstone_keys(spark, path, manifest)
+    if not deltas and tomb is None:
         return spec
-    delta_frames = [_read_delta_batch(spark, path, manifest, d)
-                    for d in deltas]
-    delta = None
-    for f in delta_frames:
-        delta = f if delta is None else \
-            delta.unionByName(f, allowMissingColumns=True)
-    if delta is not None and tomb_keys is not None:
+    delta = _read_deltas(spark, path, manifest)
+    if delta is not None and tomb is not None:
         # delta rows for a tombstoned key fold away with the rest
-        # (tomb_keys carries its own size-gated broadcast hint)
-        delta = delta.join(tomb_keys,
-                           manifest["tombstone_key"], "left_anti")
-    if delta is not None and mode == "incremental":
-        # The incremental fold reads the delta set TWICE — once for
-        # the dirtied-bucket census (_touched_buckets) and once inside
-        # the merged rewrite. When the outstanding batches are small
-        # (free filesystem metadata — the usual state under a
-        # max_deltas maintenance policy), pin the union in the block
-        # manager so both passes read memory and the N tiny batch
-        # directories are listed/scanned once (guide §1.2 step 1).
-        # Large backlogs keep the streaming two-pass shape — never
-        # force table-scale bytes through the block manager.
-        gate = int(os.environ.get(
-            "SPARK_GRAFT_COMPACT_MATERIALIZE_MB", "256")) << 20
+        # (tomb carries its own size-gated broadcast hint)
+        delta = delta.join(tomb, manifest["tombstone_key"], "left_anti")
+    if delta is not None:
+        # the fold reads the delta set twice: the dirtied-bucket census
+        # below and the rewrite. A small backlog (free filesystem
+        # metadata) is pinned so the batches are listed and scanned
+        # once; a large one keeps the streaming two-pass shape, never
+        # forcing table-scale bytes through the block manager.
         try:
             delta_bytes = sum(
                 fsio.size_of(spark, fsio._join(path, DELTA_DIR, d))
                 for d in deltas)
         except Exception:
             delta_bytes = None
-        if delta_bytes is not None and delta_bytes < gate:
+        if delta_bytes is not None and \
+                delta_bytes < COMPACT_MATERIALIZE_BYTES:
             from aggregation_duckdb_spark.runtime import materialize
             delta = materialize(delta)
+    dirtied = set(_touched_buckets(delta, spec)) \
+        if delta is not None else set()
+    if tomb is not None:
+        # ONE column-pruned semi-join scan (key columns + the zbucket
+        # partition column only) finds every bucket that physically
+        # holds a tombstoned key — those are the only extra buckets
+        # the fold rewrites
+        kc = manifest["tombstone_key"]
+        victims = (_read_live(spark, path, manifest)
+                   .select("zbucket", *kc)
+                   .join(tomb, kc, "semi")
+                   .select("zbucket").distinct())
+        dirtied |= {r[0] for r in victims.collect()}
+    dirtied = sorted(dirtied)
+    rows = _read_snapshot(spark, path, manifest, dirtied, deltas=delta,
+                          tomb=tomb).drop("zbucket")
+    _rewrite_buckets(spark, path, base_v, manifest, dirtied, rows,
+                     "compact_incremental", files_per_bucket, vacuum)
+    return spec
 
+
+def _compact_full(spark: SparkSession, path: str, base_v: int,
+                  manifest: dict, files_per_bucket: int,
+                  vacuum: bool) -> dict:
+    """``compact_zordered(mode="full")``: rebuild every bucket over
+    recomputed bounds. The read is the LOGICAL visible table (deltas
+    folded, tombstoned rows removed) and the spec is re-keyed to
+    match: the rebuild MATERIALIZES any column mapping — renames
+    become the stored names, drops/adds are already resolved by the
+    storage layer — so the fresh manifest carries no mapping fields."""
+    deltas = set(manifest.get("deltas", []))
+    full = read_zordered(spark, path, manifest).drop("zbucket")
+    new_spec = _respec_bounds(_spec_logical(manifest), full)
     gen = _new_gen()
-    data_root = fsio._join(path, DATA_DIR)
-    if mode == "full":
-        # read_zordered applies this manifest's tombstones, so the
-        # rebuild physically removes every tombstoned row. The read is
-        # LOGICAL and the spec is re-keyed to match: a full rebuild
-        # MATERIALIZES any column mapping (renames become the stored
-        # names, drops/adds are already resolved by the storage layer)
-        # — the fresh manifest below carries no mapping fields, which
-        # is exactly right once the data is rewritten
-        full = read_zordered(spark, path, manifest,
-                             include_deltas=False).drop("zbucket")
-        if delta is not None:
-            full = full.unionByName(_rename_logical(manifest, delta),
-                                    allowMissingColumns=True)
-        new_spec = _respec_bounds(_spec_logical(manifest), full)
-        _write_clustered(full, data_root, new_spec, gen, files_per_bucket)
-        buckets, stats, cols = _written_meta(spark, path, gen, new_spec)
+    _write_clustered(full, fsio._join(path, DATA_DIR), new_spec, gen,
+                     files_per_bucket)
+    buckets, stats, cols = _written_meta(spark, path, gen, new_spec)
 
-        def rebase(latest: dict) -> dict:
-            # a full rebuild read EVERY bucket and folded every delta
-            # and tombstone, so only blind appends landed after the
-            # base snapshot can merge; anything else conflicts
-            if latest.get("gens", {}) != manifest.get("gens", {}) \
-                    or latest.get("spec") != manifest.get("spec") \
-                    or latest.get("tombstones", []) != \
-                    manifest.get("tombstones", []):
-                _conflict("compact_full", latest,
-                          "changed table state mid-rebuild")
-            surviving = [d for d in latest.get("deltas", [])
-                         if d not in set(deltas)]
-            ren, dropped, added = _col_mapping(manifest)
-            if surviving and (dropped or added or
-                              any(p != l for p, l in ren.items())):
-                # A mapping-materializing rebuild is a METADATA
-                # change: the fresh manifest clears column_map /
-                # dropped_cols / added_cols, so a concurrent append's
-                # delta batch — written in the OLD physical names and
-                # without the added columns' fills — would be read
-                # untranslated afterwards (unionByName NULL-fills the
-                # renamed/added columns: silent corruption). Conflict
-                # instead, matching Delta's metadata-conflict rule;
-                # the competitor retries against the new snapshot.
-                _conflict("compact_full", latest,
-                          "append landed while a column mapping was "
-                          "being materialized")
-            out = {"spec": new_spec,
-                   "gens": {str(k): gen for k in buckets},
-                   "deltas": surviving,
-                   "stats": stats, "gen_columns": {gen: cols}}
-            if "last_batch_id" in latest:  # streaming-ingest watermark
-                out["last_batch_id"] = latest["last_batch_id"]
-            return out
+    def rebase(latest: dict) -> dict:
+        # a full rebuild read EVERY bucket and folded every delta and
+        # tombstone, so only blind appends landed after the base
+        # snapshot can merge; anything else conflicts
+        if latest.get("gens", {}) != manifest.get("gens", {}) \
+                or latest.get("spec") != manifest.get("spec") \
+                or latest.get("tombstones", []) != \
+                manifest.get("tombstones", []):
+            _conflict("compact_full", latest,
+                      "changed table state mid-rebuild")
+        surviving = [d for d in latest.get("deltas", [])
+                     if d not in deltas]
+        ren, dropped, added = _col_mapping(manifest)
+        if surviving and (dropped or added or
+                          any(p != l for p, l in ren.items())):
+            # A mapping-materializing rebuild is a METADATA change:
+            # the fresh manifest clears column_map / dropped_cols /
+            # added_cols, so a concurrent append's delta batch —
+            # written in the OLD physical names and without the added
+            # columns' fills — would be read untranslated afterwards
+            # (unionByName NULL-fills the renamed/added columns:
+            # silent corruption). Conflict instead, matching Delta's
+            # metadata-conflict rule; the competitor retries against
+            # the new snapshot.
+            _conflict("compact_full", latest,
+                      "append landed while a column mapping was "
+                      "being materialized")
+        out = {"spec": new_spec,
+               "gens": {str(k): gen for k in buckets},
+               "deltas": surviving,
+               "stats": stats, "gen_columns": {gen: cols}}
+        if "last_batch_id" in latest:  # streaming-ingest watermark
+            out["last_batch_id"] = latest["last_batch_id"]
+        return out
 
-        new_manifest = rebase(manifest)
-        commit_metrics = _rewrite_metrics(
+    _commit_and_clean(
+        spark, path, manifest, rebase(manifest), "compact_full", base_v,
+        rebase, _rewrite_metrics(
             buckets, stats, deltas_folded=len(deltas),
-            tombstones_folded=len(manifest.get("tombstones", [])))
-    elif mode == "incremental":
-        dirtied = set(_touched_buckets(delta, spec)) \
-            if delta is not None else set()
-        if tomb_keys is not None:
-            # ONE column-pruned semi-join scan (key columns + the
-            # zbucket partition column only) finds every bucket that
-            # physically holds a tombstoned key — those are the only
-            # extra buckets the fold rewrites
-            kc = manifest["tombstone_key"]
-            victims = (_read_live(spark, path, manifest)
-                       .select("zbucket", *kc)
-                       .join(tomb_keys, kc, "semi")
-                       .select("zbucket").distinct())
-            dirtied |= {r[0] for r in victims.collect()}
-        dirtied = sorted(dirtied)
-        old = read_zordered_box_dirs(spark, path, manifest, dirtied) \
-            .drop("zbucket")
-        if tomb_keys is not None:
-            old = old.join(tomb_keys,
-                           manifest["tombstone_key"], "left_anti")
-        merged = old.unionByName(delta, allowMissingColumns=True) \
-            if delta is not None else old
-        _write_clustered(merged, data_root, spec, gen, files_per_bucket)
-        wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-        survivors = set(wb)
-
-        def rebase(latest: dict) -> dict:
-            # dirtied buckets get fresh generations and zone maps;
-            # clean buckets keep theirs — mergeable onto any
-            # concurrent state that left the dirtied buckets and the
-            # folded delta/tombstone batches untouched
-            return _rebase_bucket_rewrite(
-                latest, manifest, dirtied, survivors, gen, new_stats,
-                "compact_incremental", folded_deltas=deltas,
-                folded_tombstones=list(manifest.get("tombstones", [])),
-                gen_cols=new_cols)
-
-        new_manifest = rebase(manifest)
-        new_spec = spec
-        commit_metrics = _rewrite_metrics(
-            dirtied, new_stats, deltas_folded=len(deltas),
-            tombstones_folded=len(manifest.get("tombstones", [])))
-    else:
-        raise ValueError(f"mode must be 'incremental' or 'full': {mode}")
-    v, final = _commit(spark, path, new_manifest, f"compact_{mode}",
-                       base_v, rebase=rebase, metrics=commit_metrics)
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
+            tombstones_folded=len(manifest.get("tombstones", []))),
+        vacuum)
     return new_spec
-
-
-def read_zordered_box_dirs(spark: SparkSession, path: str,
-                           manifest: dict, buckets: list[int]) -> DataFrame:
-    """The live rows of an explicit bucket list (compaction's read
-    half; same pruning mechanism as the box read)."""
-    existing = [b for b in buckets if str(b) in manifest["gens"]]
-    return _read_live(spark, path, manifest, existing).drop("gen")
 
 
 def read_zordered_box_with_delta(spark: SparkSession, path: str,
@@ -1976,156 +2012,49 @@ def upsert_zordered(df: DataFrame, path: str, key_cols: list[str],
                     emit_changes: bool = False) -> dict:
     """MERGE INTO the Z-clustered table: rows of ``df`` REPLACE
     same-key rows and new keys INSERT, touching only the buckets the
-    upsert lands in — the lakehouse merge shape on the manifest
-    layout. Mechanics mirror incremental compaction: route the upsert
-    batch to its zbuckets under the current spec, rewrite each dirtied
-    bucket as (old rows anti-joined on key) ∪ (new rows), commit the
-    manifest (atomic flip), then delete superseded generations. Cost
-    tracks the dirtied-bucket fraction, not table size.
+    upsert lands in. This is :func:`merge_zordered`'s replace-whole-row
+    case — ``UPDATE SET *`` plus an unconditional insert — run through
+    the same body and committed as op ``"upsert"``: a replaced row
+    takes the batch row's values (NULL for a column the batch lacks),
+    and a batch column the table lacks lands on updated and inserted
+    rows alike (schema evolution, as an append). Cost tracks the
+    dirtied-bucket fraction plus outstanding delta size, not table
+    size.
 
-    Contract (documented, the per-bucket bound depends on it):
+    Contract (merge's, the per-bucket bound depends on it):
     - upserted keys must keep their LAYOUT-DIMENSION values — the old
       row is found in the bucket the new row's dims map to; a key
       whose (a_col, b_col) changed is a delete+insert, not an upsert
       (the same rule Delta's file-skipping merge optimizes around);
-    - no outstanding delta batches (raises — run compact_zordered
-      first; deltas are raw unrouted files a keyed rewrite cannot
-      cheaply edit).
+    - batch keys must be unique: a repeated key raises (merge's
+      multiple-source-rows error) and nothing is committed. Null key
+      values match NULL-SAFELY — a null-key row replaces the stored
+      null-key row instead of landing next to it;
+    - a NULL layout-dimension value raises (it maps to no bucket).
 
-    COMPOSES with outstanding key tombstones when they use the SAME
-    key columns (the standard GDPR-delete → re-crawl sequence:
-    ``delete_zordered_keys`` then upsert the fresh rows, no manual
-    compact in between): the upsert's keys are subtracted from the
-    outstanding tombstone set in the same commit — the re-inserted
-    rows are visible immediately, other tombstoned keys stay hidden —
-    and the dirtied buckets' rewrite physically folds their tombstone
-    victims for free. Tombstones keyed DIFFERENTLY still raise (the
-    key anti-join cannot express them; compact first).
+    COMPOSES with any table state, as merge does. Outstanding delta
+    batches fold into the same commit (their rows join the match as
+    live rows and route into their buckets). Outstanding key
+    tombstones on the SAME key columns compose too (the standard
+    GDPR-delete → re-crawl sequence, no manual compact in between):
+    the upsert's keys leave the tombstone set in the same commit —
+    re-inserted rows are visible immediately, other tombstoned keys
+    stay hidden — and the dirtied buckets' tombstone victims fold
+    physically for free. Tombstones keyed DIFFERENTLY raise (compact
+    first).
 
     ``emit_changes=True`` additionally stores the commit's exact
     change rows (insert / update pre+post images, classified against
     the VISIBLE old rows) under ``_changes/`` and records the name in
     the manifest — the Delta Change-Data-Feed write path: the change
     feed then reads them directly instead of diffing snapshot
-    endpoints, with no retention requirement."""
-    spark = df.sparkSession
-    base_v, manifest = _latest(spark, path)
-    df = _batch_to_physical(manifest, df, "upsert_zordered")
-    key_cols = _phys_names(manifest, key_cols, "upsert_zordered")
-    if manifest.get("deltas"):
-        raise ValueError(
-            "upsert_zordered: outstanding delta batches "
-            "— run compact_zordered(path) first")
-    old_tombs = list(manifest.get("tombstones", []))
-    if old_tombs and list(manifest.get("tombstone_key", [])) \
-            != list(key_cols):
-        raise ValueError(
-            f"upsert_zordered: outstanding tombstones are keyed "
-            f"{manifest.get('tombstone_key')}, upsert uses "
-            f"{list(key_cols)} — run compact_zordered(path) first")
-    spec = manifest["spec"]
-    _validate_check(df, spec, "upsert_zordered")
-    # the upsert batch's key set scales with USER input — gate its
-    # broadcast on an exact row count (Catalyst's estimate for a
-    # projection of an arbitrary user frame inherits the parent's
-    # byte stats and over-gates). The gate count and the
-    # dirtied-bucket list each fully scanned the batch before; ONE
-    # probe aggregate now serves both (count_distinct skips all-null
-    # key tuples a frame-distinct would keep — that can only
-    # under-count the GATE for rows whose keys can never match a
-    # stored row anyway, never change data; the zbucket set is
-    # bounded by 2^bucket_bits, the sanctioned model-sized collect).
-    zb_probe, _ = _zbucket_col(spec)
-    # nk gates the broadcast NULL-SAFELY: count_distinct over a
-    # struct counts key tuples containing nulls exactly as the
-    # frame-distinct below keeps them (bare count_distinct would
-    # silently skip them and under-gate). A null ZBUCKET — a row
-    # whose layout-dimension value is null — has no bucket to dirty
-    # and would slip past the rewrite while still being written;
-    # refuse it loudly in the same aggregate (the pre-round-15 probe
-    # failed on it too, via sorted(None)).
-    probe = df.agg(
-        F.count_distinct(F.struct(*[F.col(k) for k in key_cols]))
-        .alias("nk"),
-        F.sum(zb_probe.isNull().cast("long")).alias("__nullzb"),
-        F.collect_set(zb_probe).alias("bks")).first()
-    if int(probe["__nullzb"] or 0):
-        raise ValueError(
-            f"upsert_zordered: {int(probe['__nullzb'])} row(s) carry "
-            f"a NULL layout-dimension value — they map to no zbucket, "
-            f"so the keyed rewrite cannot place them; clean the batch "
-            f"or delete+append instead")
-    new_keys = broadcast_if_counted(
-        df.select(*key_cols).distinct(),
-        known_rows=int(probe["nk"] or 0))
-    dirtied = sorted(int(b) for b in probe["bks"])
-    old = read_zordered_box_dirs(spark, path, manifest, dirtied) \
-        .drop("zbucket")
-    keep = old.join(new_keys, key_cols, "left_anti")
-    remaining_name = None
-    if old_tombs:
-        tomb = _tombstone_keys(spark, path, manifest)
-        # fold the victims physically while the buckets are being
-        # rewritten anyway (non-dirtied buckets keep theirs hidden by
-        # the remaining tombstone set until the next compaction);
-        # tomb carries its own file-size-gated hint
-        keep = keep.join(tomb, key_cols, "left_anti")
-        remaining = tomb.join(new_keys, key_cols, "left_anti")
-        if remaining.count() > 0:
-            remaining_name = f"t-{uuid.uuid4().hex}"
-            remaining.write.mode("errorifexists").parquet(
-                fsio._join(path, TOMBSTONE_DIR, remaining_name))
-    merged = keep.unionByName(df, allowMissingColumns=True)
-    change_name = None
-    if emit_changes:
-        # writer-side CDF: classify against the VISIBLE old rows (a
-        # physically-present tombstoned key was already deleted, so
-        # its re-insert is an insert). Both classify inputs are
-        # RESTRICTED to the upserted keys (round 16): rows outside
-        # them are identical on both sides of the old
-        # (visible_old, merged) comparison and were filtered by the
-        # fingerprint anyway — an upsert never deletes, so the change
-        # set is exactly classify(visible_old ⋉ keys, batch). That
-        # turns the stored-changes pass from ~three dirtied-bucket
-        # re-executions (old + keep∪df) into one semi-joined bucket
-        # scan against the model-or-count-gated key set (guide §1.2
-        # step 1).
-        visible_old = old if not old_tombs else old.join(
-            tomb, key_cols, "left_anti")
-        change_name = _write_change_file(
-            _classify_diff(visible_old.join(new_keys, key_cols,
-                                            "left_semi"),
-                           df, key_cols), path)
-    gen = _new_gen()
-    _write_clustered(merged, fsio._join(path, DATA_DIR), spec, gen,
-                     files_per_bucket)
-    wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-    survivors = set(wb)
-
-    def rebase(latest: dict) -> dict:
-        out = _rebase_bucket_rewrite(
-            latest, manifest, dirtied, survivors, gen, new_stats,
-            "upsert", folded_tombstones=old_tombs,
-            require_tombstones_unchanged=bool(old_tombs),
-            gen_cols=new_cols)
-        if remaining_name is not None:
-            out["tombstones"] = [remaining_name]
-            out["tombstone_key"] = list(key_cols)
-        if emit_changes:
-            out["change_file"] = change_name
-        return out
-
-    new_manifest = rebase(manifest)
-    v, final = _commit(spark, path, new_manifest, "upsert", base_v,
-                       rebase=rebase,
-                       metrics=_rewrite_metrics(
-                           dirtied, new_stats,
-                           tombstones_folded=len(old_tombs)))
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
-    return spec
+    endpoints, with no retention requirement. Returns the layout
+    spec."""
+    _, final, _ = _merge(df, path, key_cols, "upsert",
+                         when_matched_update="*",
+                         files_per_bucket=files_per_bucket,
+                         vacuum=vacuum, emit_changes=emit_changes)
+    return final["spec"]
 
 
 def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
@@ -2147,8 +2076,8 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
     on the manifest layout (``WHEN MATCHED [AND cond] THEN UPDATE SET
     ... / DELETE``, ``WHEN NOT MATCHED [AND cond] THEN INSERT *``,
     ``WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE/DELETE``),
-    generalizing :func:`upsert_zordered` (which is the
-    replace-whole-row special case):
+    generalizing :func:`upsert_zordered` (the replace-whole-row case,
+    which runs through this same body):
 
     - ``when_matched_update``: {target column -> SQL expression};
       expressions may reference the target row as ``t.<col>`` and the
@@ -2176,7 +2105,7 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
       full-scan price for this clause; bound it with a condition when
       you can.
 
-    Contract, same bucket-bound reasoning as upsert:
+    Contract (the bucket bound depends on it):
     - the source carries the layout-dimension columns with the TARGET
       row's values for matched keys (dims are how the old row's
       bucket is found); a key whose dims changed is a delete+insert;
@@ -2204,7 +2133,7 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
       tombstone set in the same commit (re-insert wins, other
       tombstoned keys stay hidden). Tombstones keyed on DIFFERENT
       columns than the merge still raise (the key anti-join cannot
-      express them; compact first). Like upsert, a re-inserted key
+      express them; compact first). A re-inserted key
       relies on the dims contract above — its old physical row must
       live in a bucket this merge dirties.
 
@@ -2216,19 +2145,48 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
     never table size. Reference lifecycle shape:
     aggregation_example.sql's staged re-loads (seed INSERT + corrected
     re-INSERT) are one conditional merge here."""
-    import functools as _ft
-    import operator as _op
+    v, _, dirtied = _merge(
+        source, path, key_cols, "merge", when_matched_update,
+        update_condition, when_matched_delete, when_not_matched_insert,
+        insert_condition, when_not_matched_by_source_update,
+        when_not_matched_by_source_update_condition,
+        when_not_matched_by_source_delete, files_per_bucket, vacuum,
+        emit_changes)
+    return {"buckets_rewritten": len(dirtied), "version": v}
 
+
+def _merge(source: DataFrame, path: str, key_cols: list[str], op: str,
+           when_matched_update: dict[str, str] | str | None = None,
+           update_condition: str | None = None,
+           when_matched_delete: bool | str = False,
+           when_not_matched_insert: bool = True,
+           insert_condition: str | None = None,
+           nmbs_update: dict[str, str] | None = None,
+           nmbs_update_condition: str | None = None,
+           nmbs_delete: bool | str = False,
+           files_per_bucket: int = 1,
+           vacuum: bool = True,
+           emit_changes: bool = False) -> tuple[int, dict, list[int]]:
+    """The body of :func:`merge_zordered` and :func:`upsert_zordered`,
+    committed as ``op`` (``nmbs_*`` = the NOT MATCHED BY SOURCE
+    clauses). ``when_matched_update="*"`` is ``UPDATE SET *``: every
+    non-key, non-layout column of the target and the source takes the
+    source value (NULL where the source lacks the column). Returns
+    ``(version, committed manifest, dirtied buckets)``."""
+    verb = f"{op}_zordered"
+    if not key_cols:
+        raise ValueError(f"{verb}: key_cols must name at least one column")
     spark = source.sparkSession
     base_v, manifest = _latest(spark, path)
     # logical → physical at the boundary: the source batch, the merge
     # key, the SET-clause targets, and every clause expression (whole-
     # word identifier rewrite) — internals below run purely physical
-    source = _batch_to_physical(manifest, source, "merge_zordered")
-    key_cols = _phys_names(manifest, key_cols, "merge_zordered")
-    if when_matched_update:
+    source = _batch_to_physical(manifest, source, verb)
+    key_cols = _phys_names(manifest, key_cols, verb)
+    set_all = when_matched_update == "*"
+    if when_matched_update and not set_all:
         when_matched_update = {
-            _phys_names(manifest, [c], "merge_zordered UPDATE SET")[0]:
+            _phys_names(manifest, [c], f"{verb} UPDATE SET")[0]:
             _expr_physical(manifest, e)
             for c, e in when_matched_update.items()}
     update_condition = _expr_physical(manifest, update_condition)
@@ -2236,43 +2194,39 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
     if isinstance(when_matched_delete, str):
         when_matched_delete = _expr_physical(manifest,
                                              when_matched_delete)
-    if when_not_matched_by_source_update:
-        when_not_matched_by_source_update = {
+    if nmbs_update:
+        nmbs_update = {
             _phys_names(manifest, [c],
-                        "merge_zordered NOT MATCHED BY SOURCE SET")[0]:
+                        f"{verb} NOT MATCHED BY SOURCE SET")[0]:
             _expr_physical(manifest, e)
-            for c, e in when_not_matched_by_source_update.items()}
-    when_not_matched_by_source_update_condition = _expr_physical(
-        manifest, when_not_matched_by_source_update_condition)
-    if isinstance(when_not_matched_by_source_delete, str):
-        when_not_matched_by_source_delete = _expr_physical(
-            manifest, when_not_matched_by_source_delete)
-    deltas = list(manifest.get("deltas", []))
-    old_tombs = list(manifest.get("tombstones", []))
-    if old_tombs and list(manifest.get("tombstone_key", [])) \
+            for c, e in nmbs_update.items()}
+    nmbs_update_condition = _expr_physical(manifest, nmbs_update_condition)
+    if isinstance(nmbs_delete, str):
+        nmbs_delete = _expr_physical(manifest, nmbs_delete)
+    tombs = list(manifest.get("tombstones", []))
+    if tombs and list(manifest.get("tombstone_key", [])) \
             != list(key_cols):
         raise ValueError(
-            f"merge_zordered: outstanding tombstones are keyed "
-            f"{manifest.get('tombstone_key')}, merge uses "
+            f"{verb}: outstanding tombstones are keyed "
+            f"{manifest.get('tombstone_key')}, {op} uses "
             f"{list(key_cols)} — run compact_zordered(path) first")
     spec = manifest["spec"]
-    dims = [c for c, _, _ in _spec_dims(spec)]
-    for clause in (when_matched_update,
-                   when_not_matched_by_source_update):
-        frozen = set(clause or ()) & (set(dims) | set(key_cols))
-        if frozen:
+    frozen = {c for c, _, _ in _spec_dims(spec)} | set(key_cols)
+    for clause in (None if set_all else when_matched_update, nmbs_update):
+        if set(clause or ()) & frozen:
             raise ValueError(
-                f"merge_zordered: UPDATE SET on key/layout-dimension "
-                f"column(s) {sorted(frozen)} — a moved row belongs in "
-                f"another bucket; express it as delete + insert")
+                f"{verb}: UPDATE SET on key/layout-dimension "
+                f"column(s) {sorted(set(clause) & frozen)} — a moved "
+                f"row belongs in another bucket; express it as delete "
+                f"+ insert")
     # one pass over the source serves the duplicate-key check, the
     # exact row count that gates every source-derived broadcast below
     # (a CDC-sized MERGE source at 100 TB table scale must NOT be
     # forced through the block manager; Catalyst's estimate for a
     # user frame is untrustworthy, so gate on the count), AND the
-    # source's dirtied-bucket set (formerly its own full scan): with
-    # one row per key — enforced right here — first(zbucket) per key
-    # is exact, and the distinct set is bounded by 2^bucket_bits.
+    # source's dirtied-bucket set: with one row per key — enforced
+    # right here — first(zbucket) per key is exact, and the distinct
+    # set is bounded by 2^bucket_bits.
     zb_src, _ = _zbucket_col(spec)
     src_agg = (source.groupBy(*key_cols)
                .agg(F.count(F.lit(1)).alias("__n"),
@@ -2284,14 +2238,14 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
                     F.collect_set("__zb").alias("__bks")).collect()[0])
     if (src_agg["__mx"] or 0) > 1:
         raise ValueError(
-            "merge_zordered: multiple source rows share a merge key — "
-            "each target row may match at most one source row")
+            f"{verb}: multiple source rows share a merge key — "
+            f"each target row may match at most one source row")
     if int(src_agg["__nullzb"] or 0):
         # collect_set silently drops null zbuckets — a source row with
         # a null layout-dimension value would be written without its
         # bucket ever being marked dirty; refuse loudly instead
         raise ValueError(
-            f"merge_zordered: {int(src_agg['__nullzb'])} source "
+            f"{verb}: {int(src_agg['__nullzb'])} source "
             f"key(s) carry a NULL layout-dimension value — they map "
             f"to no zbucket, so the keyed rewrite cannot place them; "
             f"clean the source or delete+append instead")
@@ -2299,23 +2253,22 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
 
     # fold any outstanding delta batches in this commit: their rows
     # are live (the matched-row search must see them) and the dirtied
-    # set grows to cover the buckets they route into
-    delta = None
-    for d in deltas:
-        dd = _read_delta_batch(spark, path, manifest, d)
-        delta = dd if delta is None else \
-            delta.unionByName(dd, allowMissingColumns=True)
+    # set grows to cover the buckets they route into; delta rows for a
+    # tombstoned key were never visible and fold away
     tomb = _tombstone_keys(spark, path, manifest)
+    delta = _read_deltas(spark, path, manifest)
     if delta is not None and tomb is not None:
-        # delta rows for a tombstoned key were never visible — they
-        # fold away exactly as compact_zordered folds them (tomb
-        # carries its own file-size-gated broadcast hint)
         delta = delta.join(tomb, key_cols, "left_anti")
     dirtied = {int(b) for b in src_agg["__bks"]}
     if delta is not None:
         dirtied |= set(_touched_buckets(delta, spec))
-    if when_not_matched_by_source_update or \
-            when_not_matched_by_source_delete:
+    # the ONE null-safe key predicate every clause path uses (a null
+    # source KEY value matches a null target key: the match, the
+    # insert anti-join and the NOT MATCHED BY SOURCE victim scan must
+    # agree, or a null-key row fires two clauses)
+    on = _conj([F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
+                for k in key_cols])
+    if nmbs_update or nmbs_delete:
         # NOT MATCHED BY SOURCE can hit any bucket: ONE column-pruned
         # scan (keys + condition columns + the zbucket partition
         # column) finds every bucket holding a VISIBLE row with no
@@ -2325,41 +2278,35 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
         live_t = _read_live(spark, path, manifest)
         if tomb is not None:
             live_t = live_t.join(tomb, key_cols, "left_anti")
-        live_t = live_t.alias("t")
-        anti_on = _ft.reduce(
-            _op.and_, [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-                       for k in key_cols])
-        miss = live_t.join(
+        miss = live_t.alias("t").join(
             broadcast_if_counted(source.select(*key_cols).alias("s"),
                                  known_rows=n_src),
-            anti_on, "left_anti")
-        unconditional = (when_not_matched_by_source_delete is True) or \
-            (bool(when_not_matched_by_source_update) and
-             when_not_matched_by_source_update_condition is None)
+            on, "left_anti")
+        unconditional = (nmbs_delete is True) or \
+            (bool(nmbs_update) and nmbs_update_condition is None)
         if not unconditional:
-            preds = []
-            if when_not_matched_by_source_delete:
-                preds.append(F.coalesce(
-                    F.expr(when_not_matched_by_source_delete),
-                    F.lit(False)))
-            if when_not_matched_by_source_update:
-                preds.append(F.coalesce(
-                    F.expr(when_not_matched_by_source_update_condition),
-                    F.lit(False)))
-            miss = miss.where(_ft.reduce(_op.or_, preds))
+            pred = F.lit(False)
+            if nmbs_delete:
+                pred = pred | F.coalesce(F.expr(nmbs_delete),
+                                         F.lit(False))
+            if nmbs_update:
+                pred = pred | F.coalesce(F.expr(nmbs_update_condition),
+                                         F.lit(False))
+            miss = miss.where(pred)
         dirtied |= {int(r[0]) for r in
                     miss.select("zbucket").distinct().collect()
                     if r[0] is not None}
     dirtied = sorted(dirtied)
-    old = read_zordered_box_dirs(spark, path, manifest, dirtied) \
-        .drop("zbucket")
-    if tomb is not None:
-        # the match sees only VISIBLE rows; the rewrite physically
-        # removes the dirtied buckets' tombstone victims for free
-        old = old.join(tomb, key_cols, "left_anti")
-    if delta is not None:
-        old = old.unionByName(delta, allowMissingColumns=True)
+    # the match sees only VISIBLE rows; the rewrite physically removes
+    # the dirtied buckets' tombstone victims for free
+    old = _read_snapshot(spark, path, manifest, dirtied, deltas=delta,
+                         tomb=tomb).drop("zbucket")
     cols = old.columns
+    if set_all:
+        cols = cols + [c for c in source.columns if c not in cols]
+        when_matched_update = {
+            c: f"s.`{c}`" if c in source.columns else "NULL"
+            for c in cols if c not in frozen}
     # __src marks matches null-safely (a null source KEY value could
     # not otherwise be told apart from "no match"). The FULL-WIDTH
     # source is the worst frame to hard-broadcast — count-gated: over
@@ -2369,8 +2316,6 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
     s = broadcast_if_counted(
         source.withColumn("__src", F.lit(1)).alias("s"),
         known_rows=n_src)
-    on = _ft.reduce(_op.and_, [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-                               for k in key_cols])
     joined = t.join(s, on, "left")
     matched = F.col("s.__src").isNotNull()
     if when_matched_delete is True:
@@ -2390,29 +2335,25 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
     # WHEN NOT MATCHED BY SOURCE mirrors the matched family on the
     # other side of the join: delete first, update second, conditions
     # t-scoped (there is no source row to reference)
-    if when_not_matched_by_source_delete is True:
+    if nmbs_delete is True:
         nmbs_del = ~matched
-    elif when_not_matched_by_source_delete:
-        nmbs_del = ~matched & F.coalesce(
-            F.expr(when_not_matched_by_source_delete), F.lit(False))
+    elif nmbs_delete:
+        nmbs_del = ~matched & F.coalesce(F.expr(nmbs_delete),
+                                         F.lit(False))
     else:
         nmbs_del = F.lit(False)
-    if when_not_matched_by_source_update:
+    if nmbs_update:
         nmbs_upd = ~matched & ~nmbs_del
-        if when_not_matched_by_source_update_condition:
+        if nmbs_update_condition:
             nmbs_upd = nmbs_upd & F.coalesce(
-                F.expr(when_not_matched_by_source_update_condition),
-                F.lit(False))
+                F.expr(nmbs_update_condition), F.lit(False))
     else:
         nmbs_upd = F.lit(False)
     out_cols = []
     for c in cols:
-        e = F.col(f"t.{c}")
-        if when_not_matched_by_source_update and \
-                c in when_not_matched_by_source_update:
-            e = F.when(nmbs_upd,
-                       F.expr(when_not_matched_by_source_update[c])) \
-                .otherwise(e)
+        e = F.col(f"t.{c}") if c in old.columns else F.lit(None)
+        if nmbs_update and c in nmbs_update:
+            e = F.when(nmbs_upd, F.expr(nmbs_update[c])).otherwise(e)
         if when_matched_update and c in when_matched_update:
             e = F.when(upd_cond, F.expr(when_matched_update[c])) \
                 .otherwise(e)
@@ -2424,75 +2365,54 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
         # same null-safe key predicate as the match: a null-key source
         # row that fired a matched clause must NOT also insert (a
         # plain column-name anti-join would let it through — null
-        # never equals null there)
-        anti_on = _ft.reduce(
-            _op.and_, [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}"))
-                       for k in key_cols])
-        # old's key projection is TABLE-side (dirtied buckets): its
-        # stats descend from parquet file bytes, so the plan-estimate
-        # gate is trustworthy here — small dirtied sets keep the hint,
-        # a 100 TB-scale dirtied set demotes to a shuffled join
+        # never equals null there). old's key projection is
+        # TABLE-side (dirtied buckets): its stats descend from parquet
+        # file bytes, so the plan-estimate gate is trustworthy here —
+        # small dirtied sets keep the hint, a 100 TB-scale dirtied set
+        # demotes to a shuffled join
         ins = source.alias("s").join(
             broadcast_if_small(old.select(*key_cols).alias("t")),
-            anti_on, "left_anti")
+            on, "left_anti")
         if insert_condition:
             ins = ins.alias("s").where(
                 F.coalesce(F.expr(insert_condition), F.lit(False)))
     changed = joined.where(upd_cond | nmbs_upd).select(*out_cols)
     if ins is not None:
         changed = changed.unionByName(ins, allowMissingColumns=True)
-    _validate_check(changed, spec, "merge_zordered")
+    _validate_check(changed, spec, verb)
 
     merged = kept if ins is None \
         else kept.unionByName(ins, allowMissingColumns=True)
     # keys the merge actually INSERTED stop being tombstoned (their
     # visible row is the new one); every other tombstoned key stays
     # hidden via a rewritten (smaller) tombstone batch
-    remaining_name = None
-    if old_tombs:
+    remaining = None
+    if tombs:
         remaining = tomb if ins is None else tomb.join(
             broadcast_if_counted(ins.select(*key_cols),
                                  known_rows=n_src),
             key_cols, "left_anti")
-        if remaining.count() > 0:
-            remaining_name = f"t-{uuid.uuid4().hex}"
-            remaining.write.mode("errorifexists").parquet(
-                fsio._join(path, TOMBSTONE_DIR, remaining_name))
-    change_name = None
+    changes = None
     if emit_changes:
-        change_name = _write_change_file(
-            _classify_diff(old, merged, key_cols), path)
-    gen = _new_gen()
-    _write_clustered(merged, fsio._join(path, DATA_DIR), spec, gen,
-                     files_per_bucket)
-    wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-    survivors = set(wb)
-
-    def rebase(latest: dict) -> dict:
-        out = _rebase_bucket_rewrite(
-            latest, manifest, dirtied, survivors, gen, new_stats,
-            "merge", folded_deltas=deltas,
-            folded_tombstones=old_tombs,
-            require_tombstones_unchanged=bool(old_tombs),
-            gen_cols=new_cols)
-        if remaining_name is not None:
-            out["tombstones"] = [remaining_name]
-            out["tombstone_key"] = list(key_cols)
-        if emit_changes:
-            out["change_file"] = change_name
-        return out
-
-    v, final = _commit(spark, path, rebase(manifest), "merge", base_v,
-                       rebase=rebase,
-                       metrics=_rewrite_metrics(
-                           dirtied, new_stats,
-                           deltas_folded=len(deltas),
-                           tombstones_folded=len(old_tombs)))
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
-    return {"buckets_rewritten": len(dirtied), "version": v}
+        pre, post = old, merged
+        if not (nmbs_update or nmbs_delete):
+            # a target row whose key the source lacks keeps its image,
+            # so the change set is the classification of the source
+            # keys' rows alone: a null-safe semi-join on them bounds
+            # both sides. With SET * and an unconditional insert, the
+            # post-image of every source key IS its source row.
+            skeys = broadcast_if_counted(
+                source.select(*key_cols).alias("s"), known_rows=n_src)
+            pre = old.alias("t").join(skeys, on, "left_semi")
+            post = source if set_all and when_not_matched_insert and \
+                not (update_condition or when_matched_delete
+                     or insert_condition) \
+                else merged.alias("t").join(skeys, on, "left_semi")
+        changes = _classify_diff(pre, post, key_cols)
+    v, final = _rewrite_buckets(
+        spark, path, base_v, manifest, dirtied, merged, op,
+        files_per_bucket, vacuum, remaining=remaining, changes=changes)
+    return v, final, dirtied
 
 
 def optimize_zordered(spark: SparkSession, path: str,
@@ -2533,27 +2453,9 @@ def optimize_zordered(spark: SparkSession, path: str,
     if not frag:
         return {"buckets_rewritten": 0,
                 "buckets_total": len(manifest["gens"])}
-    old = read_zordered_box_dirs(spark, path, manifest, frag) \
-        .drop("zbucket")
-    gen = _new_gen()
-    _write_clustered(old, fsio._join(path, DATA_DIR), spec, gen,
-                     files_per_bucket)
-    wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-    survivors = set(wb)
-
-    def rebase(latest: dict) -> dict:
-        return _rebase_bucket_rewrite(
-            latest, manifest, frag, survivors, gen, new_stats,
-            "optimize", gen_cols=new_cols)
-
-    new_manifest = rebase(manifest)
-    v, final = _commit(spark, path, new_manifest, "optimize", base_v,
-                       rebase=rebase,
-                       metrics=_rewrite_metrics(frag, new_stats))
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
+    rows = _read_snapshot(spark, path, manifest, frag).drop("zbucket")
+    _, final = _rewrite_buckets(spark, path, base_v, manifest, frag, rows,
+                                "optimize", files_per_bucket, vacuum)
     return {"buckets_rewritten": len(frag),
             "buckets_total": len(final["gens"])}
 
@@ -2722,17 +2624,9 @@ def read_zordered_eq(spark: SparkSession, path: str, eq: dict,
         bs = set(bloom_buckets(spark, path, manifest, sidecar, c, v))
         keep = bs if keep is None else (keep & bs)
     buckets = sorted(keep) if keep is not None else None
-    out = _read_live(spark, path, manifest, buckets)
-    for c, v in eq.items():
-        out = out.where(F.col(c) == v)
-    out = out.drop("gen", "zbucket")
-    for d in manifest.get("deltas", []):
-        dd = _read_delta_batch(spark, path, manifest, d)
-        for c, v in eq.items():
-            dd = dd.where(F.col(c) == v)
-        out = out.unionByName(dd, allowMissingColumns=True)
-    out = _apply_tombstones(spark, path, manifest, out)
-    return _rename_logical(manifest, out)
+    out = _read_snapshot(spark, path, manifest, buckets,
+                         _conj([F.col(c) == v for c, v in eq.items()]))
+    return _rename_logical(manifest, out.drop("zbucket"))
 
 
 def diff_zordered(spark: SparkSession, path: str, v_from: int,
@@ -2838,31 +2732,26 @@ def _classify_diff(old: DataFrame, new: DataFrame,
         F.col("__e.t").alias("_change_type"))
 
 
-def _write_change_file(changes: DataFrame, path: str) -> str | None:
-    """Persist a commit's change rows under ``_changes/`` and return
-    the directory name the committing manifest records as
-    ``change_file`` — the Delta CDF write path: the feed then reads
-    the stored rows instead of diffing snapshot endpoints (O(changes),
-    and independent of whether the endpoints stay retained). The dir
-    is unreferenced until its manifest commit lands (the usual
-    crash-orphan class). An empty change set stores nothing and
-    records ``change_file: None`` — still an explicit marker that the
-    commit's changes are KNOWN (the feed emits nothing rather than
-    falling back to a diff).
-
-    The emptiness check rides the write itself (Observation) — the
-    former ``limit(1).count()`` probe EXECUTED the whole
-    classification lineage a second time per emitting commit (guide
-    §1.2 step 1; an empty change set now costs one write of nothing
-    plus a directory delete, the rare case)."""
+def _write_nonempty(df: DataFrame, path: str, subdir: str,
+                    prefix: str) -> str | None:
+    """Write ``df`` as a new ``<prefix>-<uuid>`` batch under
+    ``subdir`` and return its name, or None (and no directory) when it
+    has no rows. The row count rides the write itself (Observation),
+    so the frame's lineage executes once. Used for a commit's stored
+    change rows (``_changes/``, the Delta CDF write path: the feed
+    reads them instead of diffing snapshot endpoints; a None
+    ``change_file`` still records that the commit's changes are known
+    and empty) and for a rewritten tombstone set. The directory is
+    unreferenced until its manifest commit lands (the usual
+    crash-orphan class)."""
     from pyspark.sql import Observation
-    name = f"c-{uuid.uuid4().hex}"
-    target = fsio._join(path, CHANGES_DIR, name)
+    name = f"{prefix}-{uuid.uuid4().hex}"
+    target = fsio._join(path, subdir, name)
     obs = Observation()
-    (changes.observe(obs, F.count(F.lit(1)).alias("n"))
+    (df.observe(obs, F.count(F.lit(1)).alias("n"))
      .write.mode("errorifexists").parquet(target))
     if not int(obs.get["n"]):
-        fsio.delete(changes.sparkSession, target)
+        fsio.delete(df.sparkSession, target)
         return None
     return name
 
@@ -3667,19 +3556,10 @@ def read_zordered_where(spark: SparkSession, path: str, ranges: dict,
     manifest = read_manifest(spark, path, version)
     ranges = _phys_ranges(manifest, ranges, "read_zordered_where")
     keep = zonemap_buckets(manifest, ranges)
-    out = _read_live(spark, path, manifest, keep)
-    for c, (lo, hi) in ranges.items():
-        out = out.where((F.col(c) >= lo) & (F.col(c) <= hi))
+    out = _read_snapshot(spark, path, manifest, keep, _in_ranges(ranges))
     # internal layout columns never escape, with or without deltas
     # outstanding — same call, same schema, regardless of table state
-    out = out.drop("gen", "zbucket")
-    for d in manifest.get("deltas", []):
-        dd = _read_delta_batch(spark, path, manifest, d)
-        for c, (lo, hi) in ranges.items():
-            dd = dd.where((F.col(c) >= lo) & (F.col(c) <= hi))
-        out = out.unionByName(dd, allowMissingColumns=True)
-    out = _apply_tombstones(spark, path, manifest, out)
-    return _rename_logical(manifest, out)
+    return _rename_logical(manifest, out.drop("zbucket"))
 
 
 def delete_zordered_box(spark: SparkSession, path: str,
@@ -3714,38 +3594,14 @@ def delete_zordered_box(spark: SparkSession, path: str,
                   if str(b) in manifest["gens"]]
     if not candidates:
         return spec
-    a, b = F.col(dims[0][0]), F.col(dims[1][0])
-    old = read_zordered_box_dirs(spark, path, manifest, candidates) \
+    old = _read_snapshot(spark, path, manifest, candidates) \
         .drop("zbucket")
-    in_box = ((a >= a_lo) & (a <= a_hi) & (b >= b_lo) & (b <= b_hi))
-    keep = old.where(~in_box)
-    change_name = None
-    if emit_changes:
-        change_name = _write_change_file(
-            old.where(in_box).withColumn("_change_type",
-                                         F.lit("delete")), path)
-    gen = _new_gen()
-    _write_clustered(keep, fsio._join(path, DATA_DIR), spec, gen,
-                     files_per_bucket)
-    wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-    survivors = set(wb)
-
-    def rebase(latest: dict) -> dict:
-        # a bucket emptied by the delete drops out of the manifest
-        # outright (candidates not in survivors)
-        out = _rebase_bucket_rewrite(
-            latest, manifest, candidates, survivors, gen, new_stats,
-            "delete_box", gen_cols=new_cols)
-        if emit_changes:
-            out["change_file"] = change_name
-        return out
-
-    new_manifest = rebase(manifest)
-    v, final = _commit(spark, path, new_manifest, "delete_box", base_v,
-                       rebase=rebase,
-                       metrics=_rewrite_metrics(candidates, new_stats))
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
+    in_box = _in_ranges({dims[0][0]: (a_lo, a_hi),
+                         dims[1][0]: (b_lo, b_hi)})
+    changes = old.where(in_box).withColumn(
+        "_change_type", F.lit("delete")) if emit_changes else None
+    # a bucket the delete empties drops out of the manifest outright
+    _rewrite_buckets(spark, path, base_v, manifest, candidates,
+                     old.where(~in_box), "delete_box", files_per_bucket,
+                     vacuum, changes=changes)
     return spec

@@ -69,11 +69,7 @@ def _commit_rows(spark: SparkSession, table_path: str, version: int,
                if d not in m_prev.get("deltas", [])]
         if not new:
             return None    # replayed batch id landed as a no-op
-        out = None
-        for d in new:
-            dd = L._read_delta_batch(spark, table_path, m_v, d)
-            out = dd if out is None else out.unionByName(
-                dd, allowMissingColumns=True)
+        out = L._read_deltas(spark, table_path, m_v, names=new)
         out = L._apply_tombstones(spark, table_path, m_v, out)
         return L._rename_logical(m_v, out)
     if skip_change_commits:

@@ -6,6 +6,8 @@ reference's sibling order is UUID-lexicographic, SURVEY §1.4.1)."""
 
 from __future__ import annotations
 
+import csv
+import os
 from decimal import Decimal
 
 import pytest
@@ -13,6 +15,7 @@ from pyspark.sql import functions as F
 
 from aggregation_duckdb_spark.operators.aggregate import (
     aggregate_with_closure, aggregate_with_rollup, standard_measures)
+from aggregation_duckdb_spark import reference_fixtures
 from aggregation_duckdb_spark.reference_fixtures import (
     GOLDEN_AGGREGATE, product_hierarchy, sales_facts_df)
 
@@ -173,31 +176,60 @@ REFERENCE_CSV = ("/root/reference/results/"
                  "product_reporting_dim_table_contents.csv")
 
 
+#: the UUID-free columns of the 7 golden reporting-dim rows, vendored
+#: from FIXTURES.md F-REF-1/F-REF-3 so the golden check always runs
+GOLDEN_DIM_CSV = os.path.join(os.path.dirname(reference_fixtures.__file__),
+                              "reference_reporting_dim.csv")
+
+
+def _csv_rows(path: str) -> list[dict]:
+    with open(path, newline="") as fh:
+        return list(csv.DictReader(fh))
+
+
+def _ref_val(row, col):
+    v = row[col]
+    return None if v == "" else v
+
+
+def _path_parent(row):
+    """Parent natural key = second-to-last entry of the level path."""
+    keys = [_ref_val(row, f"level_{i}_node_natural_key") for i in (1, 2, 3)]
+    keys = [k for k in keys if k is not None]
+    return keys[-2] if len(keys) > 1 else ""
+
+
 def test_reporting_dim_matches_reference_csv_artifact(hier):
     """Direct parity with the reference's only versioned result artifact
     (results/product_reporting_dim_table_contents.csv): every UUID-free
-    column must match per node. Surrogate node_ids and the JSON blobs
+    column must match per node. The check runs on the vendored golden
+    rows; when the reference's own CSV is present it must agree with
+    them column for column. Surrogate node_ids and the JSON blobs
     embedding them are engine-generated (UUID-lexicographic sibling
     order, SURVEY §1.4.1) and are excluded; the DFS pre-order invariant
     is asserted structurally instead."""
-    import csv
-    import os
-
-    if not os.path.exists(REFERENCE_CSV):
-        pytest.skip("reference artifact not available")
-    with open(REFERENCE_CSV, newline="") as fh:
-        ref_rows = list(csv.DictReader(fh))
-    assert len(ref_rows) == 7
-
-    def ref_val(row, col):
-        v = row[col]
-        return None if v == "" else v
+    golden = _csv_rows(GOLDEN_DIM_CSV)
+    assert len(golden) == 7
+    ref_order = None
+    if os.path.exists(REFERENCE_CSV):
+        ref_rows = {r["node_natural_key"]: r
+                    for r in _csv_rows(REFERENCE_CSV)}
+        assert len(ref_rows) == 7
+        for row in golden:
+            ref = ref_rows[row["node_natural_key"]]
+            for col, v in row.items():
+                if col != "parent_natural_key":
+                    assert ref[col] == v, (row["node_natural_key"], col)
+            assert (ref["parent_node_id"] == "") == \
+                (row["parent_natural_key"] == "")
+            assert _path_parent(ref) == row["parent_natural_key"]
+        ref_order = {int(k): int(r["node_sort_order"])
+                     for k, r in ref_rows.items()}
 
     dim = {r["node_natural_key"]: r
            for r in hier.reporting_dim(num_levels=3).collect()}
     parent_of = {}
-    ref_order = {}
-    for row in ref_rows:
+    for row in golden:
         key = int(row["node_natural_key"])
         got = dim[key]
         assert got["node_name"] == row["node_name"]
@@ -206,28 +238,26 @@ def test_reporting_dim_matches_reference_csv_artifact(hier):
         assert got["is_leaf"] == (row["is_leaf"] == "TRUE")
         assert got["level_number"] == int(row["level_number"])
         for i in (1, 2, 3):
-            nk = ref_val(row, f"level_{i}_node_natural_key")
+            nk = _ref_val(row, f"level_{i}_node_natural_key")
             assert got[f"level_{i}_node_natural_key"] == \
                 (None if nk is None else int(nk))
             assert got[f"level_{i}_node_name"] == \
-                ref_val(row, f"level_{i}_node_name")
+                _ref_val(row, f"level_{i}_node_name")
             assert got[f"level_{i}_level_name"] == \
-                ref_val(row, f"level_{i}_level_name")
-        ref_order[key] = int(row["node_sort_order"])
-        if row["parent_node_id"]:
-            # parent natural key = second-to-last path entry
-            path_keys = [ref_val(row, f"level_{i}_node_natural_key")
-                         for i in (1, 2, 3)]
-            path_keys = [int(k) for k in path_keys if k is not None]
-            parent_of[key] = path_keys[-2]
+                _ref_val(row, f"level_{i}_level_name")
+        assert _path_parent(row) == row["parent_natural_key"]
+        if row["parent_natural_key"]:
+            parent_of[key] = int(row["parent_natural_key"])
+    assert len(parent_of) == 6
 
     # both engines emit a DFS pre-order: contiguous 1..7, root first,
     # every parent before its child (sibling ORDER legitimately differs:
     # UUID-lexicographic there, natural-key here)
-    assert sorted(ref_order.values()) == list(range(1, 8))
     our_order = {r["node_natural_key"]: r["node_sort_order"]
                  for r in hier.reporting_dim(num_levels=3).collect()}
-    assert sorted(our_order.values()) == list(range(1, 8))
     for order in (ref_order, our_order):
+        if order is None:
+            continue
+        assert sorted(order.values()) == list(range(1, 8))
         for child, parent in parent_of.items():
             assert order[parent] < order[child]

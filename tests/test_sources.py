@@ -3,6 +3,7 @@ co-located join (write-time shuffle buys zero-exchange joins)."""
 
 from __future__ import annotations
 
+import pytest as _pytest
 from pyspark.sql import functions as F
 
 from aggregation_duckdb_spark.io import load_table
@@ -536,8 +537,7 @@ def test_zorder_upsert_replaces_inserts_and_stays_per_bucket(spark,
                                                              tmp_path):
     """MERGE semantics on the layered table: same-key rows replaced,
     new keys inserted, untouched buckets' generations physically
-    untouched, outstanding deltas refused, box reads row-exact."""
-    import pytest as _pytest
+    untouched, outstanding deltas folded, box reads row-exact."""
     from aggregation_duckdb_spark.sources import layout as L
     base = _zorder_frame(spark).withColumn(
         "tag", F.lit("orig"))
@@ -575,10 +575,23 @@ def test_zorder_upsert_replaces_inserts_and_stays_per_bucket(spark,
         L.read_zordered_box(spark, path, 0, 10, 0, 10).collect())
     assert got_box == want
 
-    # outstanding deltas are refused (compact first)
-    L.append_zordered(new.limit(1), path)
-    with _pytest.raises(ValueError, match="compact_zordered"):
-        L.upsert_zordered(upd, path, ["payload"])
+    # an outstanding delta folds into the upsert's commit, row-exactly
+    late = new.where(F.col("payload") == 100_000).withColumn(
+        "payload", F.lit(200_000).cast("long"))
+    L.append_zordered(late, path)
+    cols = ["a", "b", "payload", "tag"]
+    prior = [tuple(r) for r in
+             L.read_zordered(spark, path).select(*cols).collect()]
+    again = upd.withColumn("tag", F.lit("again"))
+    L.upsert_zordered(again, path, ["payload"])
+    assert L.read_manifest(spark, path)["deltas"] == []
+    assert L.table_history(spark, path)[0]["op_metrics"][
+        "deltas_folded"] == 1
+    want = sorted([t for t in prior if t[2] >= 50]
+                  + [tuple(r) for r in again.select(*cols).collect()])
+    assert sorted(tuple(r) for r in L.read_zordered(spark, path)
+                  .select(*cols).collect()) == want
+    assert (5, 0, 200_000, "inserted") in want   # the delta row
 
 
 def test_zorder_time_travel_and_vacuum(spark, tmp_path):
@@ -666,9 +679,10 @@ def test_zorder_zonemap_skips_correlated_column_buckets(spark, tmp_path):
                  .select("a", "b", "payload").collect())
     assert got == want
 
-    # upsert refreshes only dirtied buckets' stats
-    up = df.where(F.col("payload") == 5_000).withColumn(
-        "payload", F.col("payload"))  # same keys/dims, version bump
+    # upsert refreshes only dirtied buckets' stats (one batch row per
+    # key — upsert refuses repeated batch keys, as merge does)
+    up = df.where(F.col("payload") == 5_000).dropDuplicates(
+        ["payload"])  # same key/dims, version bump
     L.upsert_zordered(up.select("a", "b", "payload"), path,
                       ["payload"])
     m2 = L.read_manifest(spark, path)
@@ -990,9 +1004,10 @@ def test_zorder_delete_keys_tombstones_then_fold(spark, tmp_path):
                        spark, path, 0, 2000, 0, 2000).collect())
     assert (1, 1, 5) not in got_d and (2, 2, 900_001) in got_d
 
-    # upsert refuses while tombstones are outstanding
+    # an upsert keyed differently from the outstanding tombstones
+    # refuses (compact first)
     with _pytest.raises(ValueError, match="compact_zordered"):
-        L.upsert_zordered(base.limit(1), path, ["payload"])
+        L.upsert_zordered(base.limit(1), path, ["a"])
 
     # the fold: only victim/delta buckets rewritten, queues cleared
     L.compact_zordered(spark, path)
@@ -1317,13 +1332,16 @@ def test_concurrent_append_and_delete_keys_both_land(
     assert got.isdisjoint({0, 1, 4})    # and so did the delete
 
 
+@_pytest.mark.parametrize(
+    "verb", ["upsert", "merge", "optimize", "delete_box"])
 def test_conflicting_bucket_rewrites_raise_cleanly(
-        spark, tmp_path, monkeypatch):
-    """Optimistic concurrency, the true-conflict case: two upserts
-    dirtying the same bucket — the loser's rebase sees its touched
-    bucket's generation changed and raises CommitConflict naming the
-    competing operation; the winner's state is untouched."""
-    import pytest as _pytest
+        spark, tmp_path, monkeypatch, verb):
+    """Optimistic concurrency, the true-conflict case, for every verb
+    that commits through the shared bucket-rewrite engine: a
+    concurrent upsert rewrites a bucket the loser also rewrites — the
+    loser's rebase sees that bucket's generation changed and raises
+    CommitConflict naming the competing operation; the winner's state
+    is untouched."""
     from aggregation_duckdb_spark import fsio
     from aggregation_duckdb_spark.sources import layout as L
     base = _zorder_kv_frame(spark)
@@ -1333,19 +1351,29 @@ def test_conflicting_bucket_rewrites_raise_cleanly(
         .withColumn("val", F.lit(-1).cast("long"))
     theirs = base.where(F.col("payload") < 10) \
         .withColumn("val", F.lit(-2).cast("long"))
+    lose = {
+        "upsert": lambda: L.upsert_zordered(mine, path, ["payload"]),
+        "merge": lambda: L.merge_zordered(
+            mine, path, ["payload"], when_matched_update={"val": "s.val"}),
+        # min_files=0: every live bucket counts as fragmented
+        "optimize": lambda: L.optimize_zordered(spark, path, min_files=0),
+        # a box over the whole table dirties every bucket
+        "delete_box": lambda: L.delete_zordered_box(
+            spark, path, -10_000, 10_000, -10_000, 10_000),
+    }[verb]
 
     real = fsio.write_json_at
     fired = {}
 
     def inject(spk, mdir, obj, version):
-        if obj.get("op") == "upsert" and "x" not in fired:
+        if obj.get("op") == verb and "x" not in fired:
             fired["x"] = True
             L.upsert_zordered(theirs, path, ["payload"])
         return real(spk, mdir, obj, version)
 
     monkeypatch.setattr(fsio, "write_json_at", inject)
     with _pytest.raises(L.CommitConflict, match="'upsert'.*rewrote bucket"):
-        L.upsert_zordered(mine, path, ["payload"])
+        lose()
     monkeypatch.undo()
 
     # the winner's commit is intact and readable
@@ -1353,6 +1381,7 @@ def test_conflicting_bucket_rewrites_raise_cleanly(
     vals = {r.val for r in L.read_zordered(spark, path)
             .where(F.col("payload") < 10).collect()}
     assert vals == {-2}
+    assert L.read_zordered(spark, path).count() == base.count()
 
 
 def test_upsert_composes_over_outstanding_tombstones(spark, tmp_path):
@@ -1701,8 +1730,12 @@ def test_vacuum_retention_window_spares_inflight_writer_dirs(
     assert out["deleted_gens"] == 1
 
 
-def test_disjoint_bucket_rewrites_merge(spark, tmp_path, monkeypatch):
-    """Two upserts dirtying DISJOINT buckets must both land (the
+@_pytest.mark.parametrize(
+    "verb", ["upsert", "merge", "optimize", "delete_box"])
+def test_disjoint_bucket_rewrites_merge(spark, tmp_path, monkeypatch,
+                                        verb):
+    """A bucket rewrite (each verb on the shared engine) racing an
+    upsert that dirties a DISJOINT bucket must let both land (the
     WriteSerializable merge): the loser rebases — its touched
     buckets' generations are unchanged in the winner's manifest — and
     the final state carries both rewrites."""
@@ -1720,23 +1753,56 @@ def test_disjoint_bucket_rewrites_merge(spark, tmp_path, monkeypatch):
     mk = lambda r, v: spark.createDataFrame(  # noqa: E731
         [(r["a"], r["b"], r["payload"], v)],
         "a long, b long, payload long, val long")
+    if verb == "optimize":
+        # fragment r1's bucket alone (an upsert of its own rows at
+        # files_per_bucket=8, AQE coalescing off so the salt holds),
+        # so optimize rewrites that bucket and no other
+        own = base.withColumn("__zb", zb) \
+            .where(F.col("__zb") == r1["__zb"]).drop("__zb")
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        prev = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "false")
+            L.upsert_zordered(own, path, ["payload"], files_per_bucket=8)
+        finally:
+            spark.conf.set(key, prev)
+    v0 = L.table_version(spark, path)
+    lose = {
+        "upsert": lambda: L.upsert_zordered(mk(r1, -1), path, ["payload"]),
+        "merge": lambda: L.merge_zordered(
+            mk(r1, -1), path, ["payload"],
+            when_matched_update={"val": "s.val"}),
+        "optimize": lambda: L.optimize_zordered(spark, path),
+        # a point box: exactly r1's bucket
+        "delete_box": lambda: L.delete_zordered_box(
+            spark, path, r1["a"], r1["a"], r1["b"], r1["b"]),
+    }[verb]
 
     real = fsio.write_json_at
     fired = {}
 
     def inject(spk, mdir, obj, version):
-        if obj.get("op") == "upsert" and "x" not in fired:
+        if obj.get("op") == verb and "x" not in fired:
             fired["x"] = True
             L.upsert_zordered(mk(r2, -2), path, ["payload"])
         return real(spk, mdir, obj, version)
 
     monkeypatch.setattr(fsio, "write_json_at", inject)
-    L.upsert_zordered(mk(r1, -1), path, ["payload"])
+    res = lose()
     monkeypatch.undo()
 
-    assert L.table_version(spark, path) == 3      # both committed
+    assert fired and L.table_version(spark, path) == v0 + 2  # both
     got = {r.payload: r.val for r in L.read_zordered(spark, path).collect()}
-    assert got[r1["payload"]] == -1 and got[r2["payload"]] == -2
+    assert got[r2["payload"]] == -2
+    if verb in ("upsert", "merge"):
+        assert got[r1["payload"]] == -1
+    elif verb == "optimize":
+        assert res["buckets_rewritten"] == 1
+        assert got[r1["payload"]] == r1["val"]
+    else:
+        assert r1["payload"] not in got
+    assert len(got) == base.count() - (verb == "delete_box") * sum(
+        1 for r in rows if (r["a"], r["b"]) == (r1["a"], r1["b"]))
 
 
 def test_interleaved_tombstone_adds_both_land(spark, tmp_path,
@@ -2299,6 +2365,29 @@ def test_merge_zordered_replaces_upsert_semantics(spark, tmp_path):
     b = sorted((r.payload, r.val) for r in
                L.read_zordered(spark, p2).collect())
     assert a == b
+
+    # upsert IS that merge case, so it shares merge's key contract: a
+    # repeated batch key raises the duplicate-key error, commits nothing
+    v = L.table_version(spark, p1)
+    one = src.where(F.col("payload") == 9)
+    dup = one.unionByName(one.withColumn("val", F.lit(-8).cast("long")))
+    with _pytest.raises(ValueError,
+                        match="multiple source rows share a merge key"):
+        L.upsert_zordered(dup, p1, ["payload"])
+    assert L.table_version(spark, p1) == v
+    assert sorted((r.payload, r.val) for r in
+                  L.read_zordered(spark, p1).collect()) == a
+
+    # ...and a null key replaces the stored null-key row null-safely
+    # (mirrors test_merge_zordered_null_key_fires_one_clause)
+    kv = "a long, b long, payload long, val long"
+    p3 = str(tmp_path / "z_m3")
+    L.write_zordered(base.unionByName(spark.createDataFrame(
+        [(50, 50, None, 7)], kv)), p3, "a", "b", bits=7, bucket_bits=4)
+    L.upsert_zordered(spark.createDataFrame([(50, 50, None, 8)], kv),
+                      p3, ["payload"])
+    assert [r.val for r in L.read_zordered(spark, p3)
+            .where(F.col("payload").isNull()).collect()] == [8]
 
     L.delete_zordered_keys(base.where(F.col("payload") == 1)
                            .select("val"), p2, ["val"])
