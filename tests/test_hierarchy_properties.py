@@ -84,7 +84,7 @@ def test_closure_and_dfs_properties(spark, seed, n, path):
 
 def test_rollup_equals_closure_on_random_facts(spark):
     rng = random.Random(3)
-    # uniform-depth tree (rollup requires facts on max-depth leaves)
+    # uniform-depth tree, facts on its leaves
     rows = [(0, "root", "L1", None)]
     leaves = []
     for b in range(3):
@@ -117,6 +117,70 @@ def test_rollup_equals_closure_on_random_facts(spark):
     # root totals
     root = va[0]
     assert root[0] == sum(r["sum_amount"] for r in a if r["ancestor_level_number"] == 3)
+
+
+@pytest.mark.parametrize("facts_on", ["leaves", "all_nodes"])
+@pytest.mark.parametrize("seed", [5, 23])
+def test_strategies_agree_row_for_row_on_ragged_trees(spark, seed, facts_on):
+    """On a random ragged tree (leaves at several depths, facts on the
+    leaves or on every node), the closure and ROLLUP reports are the
+    same rows in the same order across every column, and both equal a
+    plain-Python subtree aggregate. Without ``reporting_dim`` the
+    closure report is the same rows in natural-key order, its names
+    taken from the closure."""
+    rng = random.Random(seed)
+    rows = random_tree(rng, 60)
+    d = depths(rows)
+    parent = {k: p for k, _, _, p in rows}
+    leaves = sorted(set(parent) - set(parent.values()))
+    assert len({d[k] for k in leaves}) >= 3       # ragged
+    df = spark.createDataFrame(rows, "natural_key long, name string, level_name string, parent_natural_key long")
+    h = Hierarchy.from_adjacency(df, natural_key="natural_key", name="name",
+                                 level_name="level_name",
+                                 parent_natural_key="parent_natural_key")
+    targets = leaves if facts_on == "leaves" else sorted(parent)
+    fact_rows = [(rng.choice(targets), rng.randint(1, 12), rng.randint(1, 100))
+                 for _ in range(400)]
+    facts = spark.createDataFrame(fact_rows, "node_key long, customer long, amount long")
+    measures = [F.sum("amount").alias("sum_amount"),
+                F.count_distinct("customer").alias("dcust"),
+                F.count(F.lit(1)).alias("n")]
+    dim = h.reporting_dim()
+    a = [r.asDict() for r in aggregate_with_closure(
+        facts, h.closure(), "node_key", measures, reporting_dim=dim).collect()]
+    b = [r.asDict() for r in aggregate_with_rollup(
+        facts, dim, "node_key", measures, num_levels=h.depth).collect()]
+    shared = sorted(a[0])
+    assert set(b[0]) == set(shared)     # every column is shared
+    assert [[r[c] for c in shared] for r in a] == \
+        [[r[c] for c in shared] for r in b]
+    assert [r["node_sort_order"] for r in a] == \
+        sorted(r["node_sort_order"] for r in a)
+
+    def ancestors(k):
+        while k is not None:
+            yield k
+            k = parent[k]
+
+    want = {}
+    for k, cust, amount in fact_rows:
+        for anc in ancestors(k):
+            s_, c_, n_ = want.get(anc, (0, set(), 0))
+            want[anc] = (s_ + amount, c_ | {cust}, n_ + 1)
+    names = {k: name for k, name, _, _ in rows}
+    assert {r["ancestor_node_natural_key"]:
+            (r["sum_amount"], r["dcust"], r["n"], r["product_node_name"])
+            for r in a} == \
+        {k: (s_, len(c_), n_, "-" * 7 * (d[k] - 1) + names[k])
+         for k, (s_, c_, n_) in want.items()}
+
+    plain = [r.asDict() for r in aggregate_with_closure(
+        facts, h.closure(), "node_key", measures).collect()]
+    assert [r["ancestor_node_natural_key"] for r in plain] == \
+        sorted(want)
+    by_key = sorted(({c: v for c, v in r.items() if c != "node_sort_order"}
+                     for r in a), key=lambda r: r["ancestor_node_natural_key"])
+    assert plain == by_key
 
 
 def test_local_and_distributed_flatten_agree(spark):

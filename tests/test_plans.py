@@ -5,6 +5,8 @@ data path) fails here instead of on a cluster."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -23,9 +25,30 @@ def test_flagship_closure_plan_shape(spark, sf_dir):
     exact-distinct aggregate and (b) the final presentation sort."""
     agg = fs.flagship_closure_agg(spark, sf_dir)
     assert_broadcast_join(agg, at_least=2)   # customer attach + closure fan-out
-    assert_max_shuffles(agg, 3)              # 2 distinct-agg phases + order-by
+    # 2 distinct-agg phases + the one-partition sort; that third one is
+    # a SinglePartition exchange, which count_shuffles leaves out
+    assert_max_shuffles(agg, 3)
     assert_whole_stage_codegen(agg)
     assert_no_row_python_udf(agg)
+
+
+@pytest.mark.parametrize("name", ["hier_agg_closure", "hier_agg_rollup"])
+def test_hier_reports_group_on_natural_key(spark, sf_dir, name):
+    """Both report strategies aggregate on the bigint natural key only:
+    no surrogate md5 id or name string rides through the distinct
+    aggregate's shuffles. The node attributes attach after it, and the
+    dim-sized result sorts in one partition — no range partitioning
+    and so no sampling job."""
+    from aggregation_duckdb_spark.plans import physical_plan
+    agg = matrix.queries()[name](spark, sf_dir)
+    plan = physical_plan(agg, "simple")
+    keys = re.findall(r"HashAggregate\(keys=\[([^\]]*)\]", plan)
+    assert keys, plan
+    for k in keys:
+        assert not re.search(r"ancestor_node_id|level_\d+_node_id|_name\b", k), k
+    assert "rangepartitioning" not in plan
+    assert plan.count("Exchange SinglePartition") == 1, plan
+    assert_max_shuffles(agg, 3)
 
 
 def test_fact_scan_pushdown_and_pruning(spark, sf_dir):
